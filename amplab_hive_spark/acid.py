@@ -77,6 +77,7 @@ from amplab_hive_spark.ddl import (
     _partition_columns,
     _reject_nondeterministic,
     _resolve_targets,
+    _set_columns,
     _table_location,
 )
 
@@ -544,9 +545,10 @@ def update_mor(
     _reject_nondeterministic(condition, "UPDATE")
     _validate_compact_mode(compact_mode)
     _validate_keys(spark, name, key_cols)
-    base_cols = spark.table(_qualify(spark, name)).columns
+    base_schema = spark.table(_qualify(spark, name)).schema
     pcols = _partition_columns(spark, _qualify(spark, name))
-    assignments = _resolve_targets(base_cols, assignments, "UPDATE", name, pcols)
+    assignments = _resolve_targets(base_schema.names, assignments, "UPDATE",
+                                   name, pcols)
     current = read_mor(spark, name)
     cond = F.coalesce(F.expr(condition), F.lit(False))
     hit_keys = (
@@ -558,14 +560,9 @@ def update_mor(
         return 0
     keyed = F.broadcast(hit_keys) if n_keys <= _BROADCAST_KEY_ROW_CAP else hit_keys
     group_rows = current.join(keyed, on=list(key_cols), how="left_semi")
-    cols = [
-        F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-        if c in assignments
-        else F.col(c)
-        for c in base_cols
-    ]
     staged = group_rows.select(
-        *cols, F.coalesce(cond, F.lit(False)).alias("__matched")
+        *_set_columns(base_schema, cond, assignments),
+        F.coalesce(cond, F.lit(False)).alias("__matched"),
     ).localCheckpoint(eager=True)
     # matched + total row counts in ONE job over the checkpointed
     # blocks (was two separate counts — guide §5 driver barriers, r15)
@@ -575,6 +572,11 @@ def update_mor(
     ).collect()[0]
     matched, n_new = int(counts["matched"]), int(counts["n_new"])
     new_rows = staged.drop("__matched")
+    # the insert delta is read back with the base schema (_delta_read):
+    # a row image at any other type would fail every later read
+    got = [(f.name, f.dataType) for f in new_rows.schema.fields]
+    want = [(f.name, f.dataType) for f in base_schema.fields]
+    assert got == want, f"UPDATE row images {got} != table schema {want}"
     if set(assignments) & set(key_cols):
         # a key-column assignment may produce NULL keys — rows no
         # future equality delete could address (the delete-side NULL

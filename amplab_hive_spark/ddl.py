@@ -200,6 +200,23 @@ def _resolve_targets(
     return resolved
 
 
+def _set_columns(schema, cond, assignments: dict[str, str]) -> list:
+    """The UPDATE projection over ``schema``: an assigned column
+    becomes ``CASE WHEN cond THEN CAST(expr AS <its type>) ELSE col
+    END``, every other column passes through. Hive UPDATE keeps each
+    column's type, so a widening expression (``c * 1.1`` on an INT
+    column) is cast back rather than changing the row image's type.
+    Shared by the copy-on-write and merge-on-read UPDATE."""
+    from pyspark.sql import functions as F
+
+    return [
+        F.when(cond, F.expr(assignments[f.name]).cast(f.dataType))
+        .otherwise(F.col(f.name)).alias(f.name)
+        if f.name in assignments else F.col(f.name)
+        for f in schema.fields
+    ]
+
+
 def _affected_partitions(spark, df, cond, pcols) -> list[tuple]:
     """Distinct partition tuples containing rows that match ``cond``.
     The scan is partition-pruned by Catalyst whenever the condition
@@ -435,13 +452,8 @@ def update_table(
             return 0
         scoped = _partition_membership(df, pcols, parts)
     # Flag evaluates against PRE-update values (same projection input).
-    cols = [
-        F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-        if c in assignments
-        else F.col(c)
-        for c in df.columns
-    ]
-    staged = scoped.select(*cols, F.coalesce(cond, F.lit(False)).alias("__matched"))
+    staged = scoped.select(*_set_columns(df.schema, cond, assignments),
+                           F.coalesce(cond, F.lit(False)).alias("__matched"))
     # localCheckpoint materializes once and truncates lineage (Spark
     # refuses to overwrite a table its own plan still reads).
     staged = staged.localCheckpoint(eager=True)

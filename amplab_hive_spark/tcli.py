@@ -22,28 +22,30 @@ engine dialect: macros, MOR UPDATE/DELETE/MERGE, COMPACT,
 GRANT/REVOKE — and the enforcement gate, because Engine.sql IS the
 gate.
 
-Session model (HS2's one-conf-per-session, same as service.py): each
-OpenSession gets its own ``spark.newSession()`` + Engine — private
-temp views, SQLConf, and macro registry — sharing the catalog and
-executors. The OpenSession username becomes the session's
-``user.name`` (HS2's trusted-auth posture: NOSASL/PLAIN usernames are
-client-asserted, like the reference without Kerberos), and the
-parent session's ``spark.sql.authz.enabled`` is inherited so an
-enforcing deployment stays enforcing per connection.
+Session model (HS2's one-conf-per-session): each OpenSession gets
+statement.py's per-connection session — its own ``spark.newSession()``
++ Engine, with private temp views, SQLConf and macro registry over the
+shared catalog and executors. The OpenSession username becomes the
+session's ``user.name`` (HS2's trusted-auth posture: NOSASL/PLAIN
+usernames are client-asserted, like the reference without Kerberos),
+and the parent session's ``spark.sql.authz.enabled`` is inherited so
+an enforcing deployment stays enforcing per connection.
 
 Protocol subset (everything beeline's -e path uses): OpenSession,
-ExecuteStatement (sync execution; async callers see FINISHED/ERROR
-at the first GetOperationStatus), GetOperationStatus,
-GetResultSetMetadata, FetchResults (FETCH_NEXT paging over
-toLocalIterator; fetchType=1 log requests answered empty),
-CancelOperation, CloseOperation, CloseSession, GetInfo — plus the
-JDBC METADATA operations (DatabaseMetaData / beeline ``!tables``,
-``!columns``; the reference's Get*Operation.java family):
+ExecuteStatement (runAsync=false runs inline, so the handle is born
+FINISHED; runAsync=true — beeline's default — runs on a worker thread
+while clients poll GetOperationStatus), GetOperationStatus,
+GetResultSetMetadata, FetchResults (FETCH_NEXT paging through
+statement.py's cursor; fetchType=1 serves the operation log
+incrementally), CancelOperation (aborts the operation's job group,
+an in-flight fetch included), CloseOperation, CloseSession, GetInfo —
+plus the JDBC METADATA operations (DatabaseMetaData / beeline
+``!tables``, ``!columns``; the reference's Get*Operation.java family):
 GetCatalogs, GetSchemas, GetTables, GetColumns, GetFunctions,
 GetTypeInfo, each serving the fixed JDBC result-set shape over the
-live session catalog with %/_ search patterns. The
-column-based TRowSet (protocol >= V6) carries bool/tinyint/smallint/
-int/bigint/float/double natively and renders everything else —
+live session catalog with %/_ search patterns. The column-based
+TRowSet (protocol >= V6) carries bool/tinyint/smallint/int/bigint/
+float/double natively and renders everything else —
 decimal, date, timestamp, arrays, maps, structs — as strings with
 the accurate TTypeId in metadata, exactly HS2's own serialization
 rule for those types.
@@ -57,7 +59,6 @@ from __future__ import annotations
 
 import hmac
 import io
-import itertools
 import json
 import re
 import socket
@@ -66,9 +67,11 @@ import struct
 import threading
 import time
 import uuid
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
 from pyspark.sql import SparkSession
+
+from amplab_hive_spark import statement
 
 # -- Thrift binary protocol (public Apache Thrift spec) ------------------
 
@@ -399,39 +402,30 @@ def _op_handle_fields(guid: bytes, secret: bytes, has_result: bool) -> list:
 
 
 class _Operation:
-    def __init__(self, df=None, columns=None, rows=None,
-                 secret: bytes = b"", running: bool = False) -> None:
-        """A DataFrame-backed statement result (rows paged via
-        toLocalIterator), a STATIC metadata result (columns +
-        materialized row list — the Get* operations, whose row counts
-        are catalog-bounded), or — with ``running=True`` — an ASYNC
-        statement still executing on its worker thread (HS2's
-        SQLOperation pool model, service/cli/operation/
-        SQLOperation.java:71): the handle is born RUNNING, the worker
-        calls finish_with/fail, and clients poll GetOperationStatus."""
+    def __init__(self, columns=None, rows=None, secret: bytes = b"",
+                 running: bool = False) -> None:
+        """A STATIC metadata result (columns + materialized row list —
+        the Get* operations, whose row counts are catalog-bounded) or,
+        with ``running=True``, a statement still executing (HS2's
+        SQLOperation model, service/cli/operation/SQLOperation.java:71):
+        the handle is born RUNNING and ``_run_statement`` publishes
+        FINISHED (``finish_with``), ERROR or CANCELED. A statement's
+        rows page through a cursor opened on its first fetch, under
+        the operation's job group (statement.py)."""
         self.secret = secret  # validated on every operation RPC
-        self.df = df
-        if running:
-            self.columns: list[tuple[str, str]] = [("result", "string")]
-            self.rows: Optional[Iterator] = None
-            self.state = OP_RUNNING
-        elif df is not None:
-            self.columns = [
-                (f.name, f.dataType.simpleString()) for f in df.schema.fields
-            ] or [("result", "string")]
-            self.rows = None
-            self.state = OP_FINISHED
-        else:
-            self.columns = columns or [("result", "string")]
-            self.rows = iter(rows or [])
-            self.state = OP_FINISHED
+        self.df = None
+        self.group = statement.new_group("tcli-op")
+        self.columns: list[tuple[str, str]] = columns or [("result", "string")]
+        self.cursor: Optional[statement.Cursor] = (
+            None if running else statement.Cursor(rows or []))
+        self.state = OP_RUNNING if running else OP_FINISHED
         self.error: Optional[str] = None
         self.lock = threading.Lock()
-        # set lock-free BEFORE cancelJobGroup fires (review r13 pass
-        # 5): the group cancel makes the worker's own Spark job raise,
-        # and without this flag that cancellation exception would
-        # publish as ERROR — the user who asked for the cancel would
-        # be told the statement failed
+        # set lock-free BEFORE the group cancel fires (review r13 pass
+        # 5): the cancel makes the statement's own Spark job raise, and
+        # without this flag that cancellation exception would publish
+        # as ERROR — the user who asked for the cancel would be told
+        # the statement failed
         self.cancel_requested = False
         # operation log (HS2's OperationLog, served by FetchResults
         # fetch_type=1): appended lock-free (list.append is atomic),
@@ -439,18 +433,12 @@ class _Operation:
         self.log_lines: list[str] = []
         self.log_read = 0
 
-    def iterator(self) -> Iterator:
-        if self.rows is None:
-            self.rows = iter(self.df.toLocalIterator())
-        return self.rows
-
     def finish_with(self, df) -> None:
-        """Async worker completion — caller holds self.lock."""
+        """Statement completion — caller holds self.lock."""
         self.df = df
         self.columns = [
             (f.name, f.dataType.simpleString()) for f in df.schema.fields
         ] or [("result", "string")]
-        self.rows = None
         self.state = OP_FINISHED
 
     def log_line(self, msg: str) -> None:
@@ -463,39 +451,16 @@ class _Session:
                  configuration: "dict[str, str] | None" = None,
                  sf_dir: "str | None" = None,
                  server_confs: "dict[str, str] | None" = None) -> None:
-        from amplab_hive_spark.catalog import ensure_session_confs
-        from amplab_hive_spark.engine import Engine
-
         self.secret: bytes = uuid.uuid4().bytes  # overwritten at register
-        sub = spark.newSession()
-        ensure_session_confs(sub)
-        # inherit the serving session's enforcement posture — a new
-        # SQLConf does NOT copy runtime confs, and an enforcing front
-        # must stay enforcing per connection
-        flag = spark.conf.get("spark.sql.authz.enabled", "")
-        if flag:
-            sub.conf.set("spark.sql.authz.enabled", flag)
-        # server-wide --hiveconf defaults: applied per sub-session
-        # because runtime conf.set on the root session does NOT
-        # propagate to newSession() SQLConfs (HS2 analogue: server
-        # hiveconf becoming each session's starting conf)
-        for k, v in (server_confs or {}).items():
-            sub.conf.set(k, v)
-        if username:
-            # HS2's trusted-auth identity: the client-asserted username
-            # becomes the session principal (NOSASL — dev posture)
-            sub.conf.set("user.name", username)
-        # TOpenSessionReq.configuration: Hive JDBC sends the URL's
-        # database as 'use:database' (review r12 — dropping it ran
-        # every statement in 'default'); other keys (set:hiveconf:*)
-        # are ignored like HS2 ignores unknown ones
-        db = (configuration or {}).get("use:database")
-        if db and db != "default":
-            sub.catalog.setCurrentDatabase(db)
-        # temp views are SESSION-scoped: a front serving the testdata
-        # catalog re-attaches it per sub-session — Engine.attach owns
-        # that (lazy, footer-read cost only; --serve-tcli)
-        self.engine = Engine(sub, sf_dir=sf_dir)
+        # the OpenSession username is the session principal (HS2's
+        # trusted-auth identity, client-asserted under NOSASL/PLAIN);
+        # TOpenSessionReq.configuration carries the JDBC URL's database
+        # as 'use:database' (review r12 — dropping it ran every
+        # statement in 'default'); other keys (set:hiveconf:*) are
+        # ignored like HS2 ignores unknown ones
+        self.engine = statement.open_session(
+            spark, sf_dir=sf_dir, server_confs=server_confs, user=username,
+            database=(configuration or {}).get("use:database"))
         self.operations: dict[bytes, _Operation] = {}
 
 
@@ -728,37 +693,9 @@ class TCLIFront:
             sess = self.sessions.pop(guid, None)
         if sess is None:
             return
-        for op_guid, op in list(sess.operations.items()):
+        for op in list(sess.operations.values()):
             if op.state == OP_RUNNING:
-                self._cancel_op(sess, op, op_guid)
-
-    @staticmethod
-    def _job_group(guid: bytes) -> str:
-        return f"tcli-op-{guid.hex()}"
-
-    @staticmethod
-    def _tag_job_group(spark, guid: bytes, desc: str) -> None:
-        try:
-            spark.sparkContext.setJobGroup(
-                TCLIFront._job_group(guid), desc[:128], True)
-        except Exception:  # noqa: BLE001 — tagging is best-effort
-            pass
-
-    @staticmethod
-    def _clear_job_group(spark) -> None:
-        # job-group properties are JVM-THREAD-local and py4j pools its
-        # JVM threads (review r13 pass 3): a stale tag would ride
-        # whatever unrelated work the pooled thread serves next —
-        # misattributed in the UI and cancellable as a unit it never
-        # belonged to. pyspark has no clearJobGroup; null the three
-        # local properties it sets.
-        try:
-            sc = spark.sparkContext
-            for prop in ("spark.jobGroup.id", "spark.job.description",
-                         "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(prop, None)
-        except Exception:  # noqa: BLE001
-            pass
+                self._cancel_op(sess, op)
 
     def _rpc_ExecuteStatement(self, req: dict) -> list:  # noqa: N802
         try:
@@ -768,90 +705,68 @@ class TCLIFront:
         stmt = req.get(2, b"")
         stmt = stmt.decode("utf-8") if isinstance(stmt, bytes) else stmt
         guid, secret = uuid.uuid4().bytes, uuid.uuid4().bytes
-        run_async = bool(req.get(4, False))
-        if not run_async:
-            # sync path (runAsync=false / absent): statement runs
-            # inline, the handle is born FINISHED — the posture pinned
-            # by test_operations_born_finished_sync_contract
-            try:
-                df = sess.engine.sql(stmt)
-                op = _Operation(df, secret=secret)
-            except Exception as e:  # noqa: BLE001 — per-statement error
-                msg = f"{type(e).__name__}: {e}"
-                return [(1, T_STRUCT, _status_error(msg))]
-            op.log_line(f"Completed executing statement; Statement: "
-                        f"{stmt.strip()[:200]!r}")
-            with self._lock:
-                sess.operations[guid] = op
-            return [
-                (1, T_STRUCT, _status_ok()),
-                (2, T_STRUCT, _op_handle_fields(guid, secret, True)),
-            ]
-        # async path (TExecuteStatementReq.runAsync — what beeline
-        # sends by default): the handle is born RUNNING, the statement
-        # runs on a daemon worker like HS2's SQLOperation background
-        # pool (SQLOperation.java:71 runInternal -> async prepare),
-        # clients poll GetOperationStatus to a terminal state and
-        # stream the operation log via FetchResults fetch_type=1
         op = _Operation(secret=secret, running=True)
         op.log_line(f"Executing statement on session of "
                     f"{sess.engine.spark.conf.get('user.name', 'anonymous')}"
                     f"; Statement: {stmt.strip()[:200]!r}")
         with self._lock:
             sess.operations[guid] = op
-            self.async_statements += 1
-
-        def work() -> None:
-            # job group is thread-local: tagging lets CancelOperation
-            # abort the statement's Spark jobs; cleared on exit so the
-            # pooled JVM thread does not carry the tag into later work
-            self._tag_job_group(sess.engine.spark, guid, stmt.strip())
-            try:
-                if op.cancel_requested:
-                    # a cancel that landed before any Spark job exists
-                    # has no group to abort — honor it before side
-                    # effects begin (review r13 pass 6). A cancel
-                    # landing DURING analyze/execute of an eager DML
-                    # remains best-effort, like HS2's compile-phase
-                    # window.
-                    with op.lock:
-                        op.state = OP_CANCELED
-                    op.log_line("Statement was canceled before "
-                                "execution began")
-                    return
-                df = sess.engine.sql(stmt)
-                with op.lock:
-                    if op.state == OP_CANCELED or op.cancel_requested:
-                        op.state = OP_CANCELED
-                        op.log_line("Statement was canceled before "
-                                    "completion")
-                        return
-                    op.finish_with(df)
-                op.log_line("Statement FINISHED")
-            except Exception as e:  # noqa: BLE001 — surfaced via status
-                with op.lock:
-                    if op.state == OP_CANCELED or op.cancel_requested:
-                        # our own cancelJobGroup made the job raise:
-                        # that is a successful cancel, not a failure
-                        op.state = OP_CANCELED
-                    else:
-                        op.error = f"{type(e).__name__}: {e}"
-                        op.state = OP_ERROR
-                if op.error:
-                    op.log_line(f"Statement ERROR: {op.error}")
-                else:
-                    # a clean user cancel must not read ERROR in the
-                    # client-streamed log (review r13 pass 6)
-                    op.log_line("Statement CANCELED")
-            finally:
-                self._clear_job_group(sess.engine.spark)
-
-        threading.Thread(target=work, daemon=True,
-                         name=f"tcli-async-{guid.hex()[:8]}").start()
+        if req.get(4, False):
+            # async path (TExecuteStatementReq.runAsync — what beeline
+            # sends by default): the handle is born RUNNING, the
+            # statement runs on a daemon worker like HS2's SQLOperation
+            # background pool, and clients poll GetOperationStatus to a
+            # terminal state, streaming the log via fetch_type=1
+            with self._lock:
+                self.async_statements += 1
+            threading.Thread(target=self._run_statement,
+                             args=(sess, op, stmt), daemon=True,
+                             name=f"tcli-async-{guid.hex()[:8]}").start()
+        else:
+            # sync path (runAsync=false / absent): the statement runs
+            # inline, so the handle is born FINISHED — the posture
+            # pinned by test_operations_born_finished_sync_contract
+            self._run_statement(sess, op, stmt)
+            if op.state == OP_ERROR:
+                with self._lock:
+                    sess.operations.pop(guid, None)
+                return [(1, T_STRUCT, _status_error(op.error))]
         return [
             (1, T_STRUCT, _status_ok()),
             (2, T_STRUCT, _op_handle_fields(guid, secret, True)),
         ]
+
+    @staticmethod
+    def _run_statement(sess: _Session, op: _Operation, stmt: str) -> None:
+        """Run ``stmt`` under the operation's job group (so
+        CancelOperation can abort its Spark jobs) and publish the
+        outcome. A cancel that landed before execution began is
+        honored before side effects begin (review r13 pass 6); one
+        landing during analyze/execute of an eager DML stays
+        best-effort, like HS2's compile-phase window."""
+        df = error = None
+        if not op.cancel_requested:
+            try:
+                with statement.tagged(sess.engine.spark, op.group,
+                                      stmt.strip()):
+                    df = sess.engine.sql(stmt)
+            except Exception as e:  # noqa: BLE001 — surfaced via status
+                error = f"{type(e).__name__}: {e}"
+        with op.lock:
+            if op.cancel_requested:
+                # our own group cancel made the job raise: that is a
+                # successful cancel, not a failure
+                op.state = OP_CANCELED
+            elif error:
+                op.error, op.state = error, OP_ERROR
+            else:
+                op.finish_with(df)
+            outcome = op.state
+        # a clean user cancel must not read ERROR in the
+        # client-streamed log (review r13 pass 6)
+        op.log_line({OP_FINISHED: "Statement FINISHED",
+                     OP_CANCELED: "Statement CANCELED"}.get(
+                         outcome, f"Statement ERROR: {error}"))
 
     def _rpc_GetOperationStatus(self, req: dict) -> list:  # noqa: N802
         try:
@@ -866,14 +781,13 @@ class TCLIFront:
 
     def _rpc_CancelOperation(self, req: dict) -> list:  # noqa: N802
         try:
-            sess, op, guid = self._operation_of(req)
+            sess, op, _ = self._operation_of(req)
         except KeyError:
             return [(1, T_STRUCT, _status_ok())]
-        self._cancel_op(sess, op, guid)
+        self._cancel_op(sess, op)
         return [(1, T_STRUCT, _status_ok())]
 
-    def _cancel_op(self, sess: _Session, op: _Operation,
-                   guid: bytes) -> None:
+    def _cancel_op(self, sess: _Session, op: _Operation) -> None:
         """Flip to CANCELED and abort the op's Spark job group.
         The JOB-GROUP cancel fires first and LOCK-FREE (review r13
         pass 3): a row fetch holds op.lock for the duration of its
@@ -882,26 +796,18 @@ class TCLIFront:
         unblocks that fetch. The STATE flip then happens under
         op.lock (review r13 pass 4: a lock-free check-then-set raced
         the worker's failure publish and could still overwrite ERROR
-        with CANCELED, masking the failure as a clean empty result —
-        the exact bug the lock-free version claimed to fix). ERROR is
-        never overwritten; FINISHED flips so further fetches stop
-        (the pinned post-finish behavior)."""
+        with CANCELED, masking the failure as a clean empty result).
+        ERROR is never overwritten; FINISHED flips so further fetches
+        stop (the pinned post-finish behavior)."""
         # the flag first (lock-free): the group cancel below will make
-        # an in-flight worker job raise, and the worker's except
-        # handler reads this flag to classify that as CANCELED rather
-        # than ERROR (review r13 pass 5)
+        # an in-flight statement job raise, and _run_statement reads
+        # this flag to classify that as CANCELED rather than ERROR
         op.cancel_requested = True
-        # a lazy statement's jobs run at FETCH time under this group
-        # tag (the fetch thread tags itself BEFORE taking op.lock),
-        # so post-FINISHED cancels abort an in-flight fetch. Static
-        # metadata ops never run group-tagged Spark jobs — skip the
-        # py4j round trip for them (every Get* close lands here).
+        # a statement's jobs — its execution and every page of its
+        # cursor — run in op.group; static metadata ops run none, so
+        # skip the py4j round trip for them (every Get* close lands here)
         if op.df is not None or op.state == OP_RUNNING:
-            try:
-                sess.engine.spark.sparkContext.cancelJobGroup(
-                    self._job_group(guid))
-            except Exception:  # noqa: BLE001 — best-effort abort
-                pass
+            statement.cancel(sess.engine.spark, op.group)
         with op.lock:
             was_running = op.state == OP_RUNNING
             if op.state != OP_ERROR:
@@ -916,11 +822,11 @@ class TCLIFront:
             # op must stop (HS2's close cancels the background run —
             # review r13 pass 3), and a FINISHED lazy op may have an
             # in-flight FETCH whose Spark jobs run under the op's
-            # group tag — closing discards the result, so those jobs
-            # must not burn on (review r13 pass 4). On terminal ops
-            # the group cancel is a no-op and the state flip is moot
-            # (the handle is gone).
-            self._cancel_op(sess, op, guid)
+            # group — closing discards the result, so those jobs must
+            # not burn on (review r13 pass 4). On terminal ops the
+            # group cancel is a no-op and the state flip is moot (the
+            # handle is gone).
+            self._cancel_op(sess, op)
             with self._lock:
                 sess.operations.pop(guid, None)
         except KeyError:
@@ -945,7 +851,7 @@ class TCLIFront:
                 return [(1, T_STRUCT, _status_error(
                     op.error or "operation failed"))]
             if op.state == OP_CANCELED and op.df is None and \
-                    op.rows is None:
+                    op.cursor is None:
                 # canceled while RUNNING: no schema ever existed
                 return [(1, T_STRUCT, _status_error(
                     "operation was canceled"))]
@@ -973,7 +879,7 @@ class TCLIFront:
     def _rpc_FetchResults(self, req: dict) -> list:  # noqa: N802
         fetch_type = req.get(4, 0)
         try:
-            sess, op, guid = self._operation_of(req)
+            sess, op, _ = self._operation_of(req)
         except KeyError as e:
             return [(1, T_STRUCT, _status_error(str(e)))]
         if fetch_type == 1:
@@ -991,45 +897,35 @@ class TCLIFront:
                                            [(ln,) for ln in snapshot])),
             ]
         n = int(req.get(3, self.fetch_default) or self.fetch_default)
-        # a lazy statement's Spark jobs run HERE, on the handler
-        # thread: tag them with the op's job group so CancelOperation
-        # can abort an in-flight fetch. Tagged BEFORE taking op.lock
-        # (review r13 pass 5: a cancel landing between the lock
-        # acquisition and a later tag would cancel an empty group and
-        # then block behind this fetch for the whole batch), cleared
-        # after (pooled JVM threads, review r13 pass 3). Static
-        # metadata ops page a materialized Python list — no Spark
-        # jobs, no tag, no 4 py4j round trips per Get* fetch (pass 6).
-        tagged = op.df is not None
-        if tagged:
-            self._tag_job_group(sess.engine.spark, guid, f"fetch {n} rows")
-        try:
-            with op.lock:
-                if op.state == OP_RUNNING:
-                    # an async statement still executing has no rows
-                    # to serve; well-behaved clients poll
-                    # GetOperationStatus first (beeline's
-                    # waitForOperationToComplete)
+        with op.lock:
+            if op.state == OP_RUNNING:
+                # an async statement still executing has no rows to
+                # serve; well-behaved clients poll GetOperationStatus
+                # first (beeline's waitForOperationToComplete)
+                return [(1, T_STRUCT, _status_error(
+                    "operation is still running"))]
+            if op.state == OP_ERROR:
+                return [(1, T_STRUCT, _status_error(
+                    op.error or "operation failed"))]
+            if op.state == OP_CANCELED:
+                if op.df is None and op.cursor is None:
+                    # canceled while RUNNING: no schema ever existed —
+                    # refuse like GetResultSetMetadata does, instead of
+                    # inventing a placeholder 'result' column (review
+                    # r13 pass 6)
                     return [(1, T_STRUCT, _status_error(
-                        "operation is still running"))]
-                if op.state == OP_ERROR:
-                    return [(1, T_STRUCT, _status_error(
-                        op.error or "operation failed"))]
-                if op.state == OP_CANCELED:
-                    if op.df is None and op.rows is None:
-                        # canceled while RUNNING: no schema ever
-                        # existed — refuse like GetResultSetMetadata
-                        # does, instead of inventing a placeholder
-                        # 'result' column (review r13 pass 6)
-                        return [(1, T_STRUCT, _status_error(
-                            "operation was canceled"))]
-                    batch: list = []
-                else:
-                    batch = list(itertools.islice(op.iterator(), n))
-        finally:
-            if tagged:
-                self._clear_job_group(sess.engine.spark)
-        has_more = len(batch) == n and n > 0
+                        "operation was canceled"))]
+                batch, has_more = [], False
+            else:
+                if op.cursor is None:
+                    # a statement's cursor opens on its first fetch, in
+                    # the op's job group: every later page job runs in
+                    # it, so CancelOperation aborts an in-flight fetch
+                    # without a per-fetch tag (statement.py)
+                    with statement.tagged(sess.engine.spark, op.group,
+                                          "tcli fetch"):
+                        op.cursor = statement.Cursor(op.df)
+                batch, has_more = op.cursor.page(n)
         return [
             (1, T_STRUCT, _status_ok()),
             (2, T_BOOL, has_more),

@@ -32,6 +32,7 @@ _FAST_MODULES = {
     "test_r14_internals.py",   # matchpath stitching + Arrow twin pins
     "test_grading_window.py",  # driver-window contract sanity
     "test_testdata_contract.py",
+    "test_statement.py",       # server-front session/cancel/cursor + MOR UPDATE type
 }
 
 
