@@ -1559,12 +1559,14 @@ def auto_publish_mor_views(spark: SparkSession) -> list[str]:
             # touches file footers at plan time and a corrupt delta
             # would surface at first QUERY, not here. An auto pass
             # must still skip such a table (r10 p3 contract), so force
-            # the footer read the old implicit inference used to do —
-            # once per server start, never on the hot write/read path.
+            # a footer read — of EVERY delta file (mergeSchema; plain
+            # inference reads one footer, so a corrupt later delta
+            # passed) — once per server start, never on the hot
+            # write/read path.
             probe_paths = [p for _, _, p in
                            _scan_deltas(_delta_path(spark, bare))]
             if probe_paths:
-                spark.read.parquet(*probe_paths).schema
+                spark.read.option("mergeSchema", "true").parquet(*probe_paths).schema
             # same qualified-value rule as publish_mor_views: the bare
             # name just resolved (mor_keys above) in the CURRENT db
             _PUBLISHED.setdefault(bare, _qualify(spark, bare))

@@ -29,7 +29,7 @@ def _iter_statements(stream):
     whose ';' is followed by a '--' comment (which swallows the
     sentinel) or whose line lacks a trailing newline must still run
     (review r8: it was silently dropped)."""
-    from amplab_hive_spark.testing_golden import split_statements
+    from amplab_hive_spark.sqltext import split_statements
 
     buf = ""
     for line in stream:
@@ -74,8 +74,7 @@ def _run_statements(engine, text: str, max_rows: int,
     # quote- and comment-aware split (shared with the golden harness)
     # — a ';' inside a string literal or a -- comment is not a
     # statement boundary.
-    from amplab_hive_spark.testing_golden import split_statements
-    from amplab_hive_spark.variables import strip_leading_comments
+    from amplab_hive_spark.sqltext import split_statements, strip_leading_comments
 
     for stmt in split_statements(text):
         # SOURCE <file>: a CLI-layer command like the reference's
@@ -196,7 +195,7 @@ def _client_main(args) -> int:
     fatal for the whole session (the wire is desynchronized once a
     reply goes unread), reported once to stderr with exit 1."""
     from amplab_hive_spark.service import SqlClient
-    from amplab_hive_spark.testing_golden import split_statements
+    from amplab_hive_spark.sqltext import split_statements
 
     host, _, port = args.connect.rpartition(":")
     if not host or not port.isdigit():

@@ -32,6 +32,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.sqltext import mask
+
 
 def create_table_as(
     spark: SparkSession,
@@ -114,15 +116,19 @@ def _partition_columns(spark: SparkSession, name: str) -> list[str]:
     statement — pure scheduling latency for metadata the catalog
     already holds. The py4j metadata read resolves the name exactly
     like listColumns (current database for bare names, db.table for
-    qualified); anything it cannot resolve (temp views, 3-part
-    names) falls back to the original API."""
+    qualified); a bare name a temp view shadows, and anything it
+    cannot resolve (3-part names), fall back to the original API,
+    which answers for the view."""
+    state = spark._jsparkSession.sessionState()
+    catalog = state.catalog()
     try:
-        ident = spark._jsparkSession.sessionState().sqlParser().parseTableIdentifier(name)
-        meta = spark._jsparkSession.sessionState().catalog().getTableMetadata(ident)
-        joined = meta.partitionColumnNames().mkString("\x00")
-        return joined.split("\x00") if joined else []
-    except Exception:  # temp view / 3-part name / parse edge: old path
-        return [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+        if "." in name or not catalog.getTempView(name).isDefined():
+            ident = state.sqlParser().parseTableIdentifier(name)
+            joined = catalog.getTableMetadata(ident).partitionColumnNames().mkString("\x00")
+            return joined.split("\x00") if joined else []
+    except Exception:  # noqa: BLE001 — 3-part name / parse edge: old path
+        pass
+    return [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
 
 
 # UPDATE/DELETE evaluate their condition in two separate scans
@@ -142,17 +148,11 @@ _NONDETERMINISTIC_FNS = re.compile(
     re.IGNORECASE,
 )
 
-# Strip single- AND double-quoted string literals (doubled-quote is
-# the embedded-quote escape; with ANSI off, Spark treats "..." as a
-# string literal too) plus backtick-quoted identifiers, so a
-# condition like note = 'call now() later' or a column named
-# `current_date` is not a false positive; the scan runs on the
-# remaining SQL text only.
-_SQL_QUOTED = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`[^`]*`")
-
-
 def _reject_nondeterministic(condition: str, statement: str) -> None:
-    m = _NONDETERMINISTIC_FNS.search(_SQL_QUOTED.sub("''", condition))
+    # the scan runs on the mask, so a condition like note = 'call
+    # now() later', a column named `current_date` or a comment naming
+    # now() is not a false positive
+    m = _NONDETERMINISTIC_FNS.search(mask(condition))
     if m:
         fn = m.group(1) or m.group(2)
         raise ValueError(

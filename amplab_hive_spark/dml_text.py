@@ -26,16 +26,19 @@ Grammar accepted (documented constraints, mirrored in tests):
      INSERT [(cols)] VALUES (exprs) | INSERT *]``
 
 All keyword boundaries (WHERE, ON..WHEN, WHEN..WHEN, AND..THEN, the
-USING source) are found by a quote- and paren-aware scanner, never
-by bare regex over the whole text — string literals containing
-keywords, commas, or ``alias.`` prefixes pass through intact.
+USING source) are found at paren/CASE depth 0 on the statement's
+``sqltext.mask``, never by bare regex over the raw text: what counts
+as a string literal, quoted identifier or comment is decided by
+``sqltext`` alone, Spark's lexical rules, so a keyword, comma or
+``alias.`` prefix inside one never marks a boundary. Extracted
+pieces are trimmed of surrounding whitespace and comments.
 Aliases in MERGE expressions are normalized to the ``t.``/``s.``
 convention merge_into uses via unique placeholder tokens in one
 logical pass (a user alias literally named ``t`` or ``s`` — even
-swapped — cannot collide with the canonical names), OUTSIDE string
-literals only, and a bare table name acts as a qualifier only when
-that side has no explicit alias (standard SQL: the alias hides the
-table name). Both MATCHED-clause orders are accepted with ANSI
+swapped — cannot collide with the canonical names), outside literals
+and comments only, and a bare table name acts as a qualifier only
+when that side has no explicit alias (standard SQL: the alias hides
+the table name). Both MATCHED-clause orders are accepted with ANSI
 first-matching-clause semantics, composed onto merge_into's fixed
 delete-before-update evaluation: DELETE-first passes through
 directly; UPDATE-first folds ``NOT <update guard>`` into the delete
@@ -67,138 +70,71 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _is_word_at(s: str, i: int, word: str) -> bool:
-    n = len(word)
-    return (
-        s[i : i + n].lower() == word
-        and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-        and (i + n >= len(s) or not (s[i + n].isalnum() or s[i + n] == "_"))
-    )
-
-
-def _scan(s: str):
-    r"""Yield (index, char, in_quote, depth) with single-quote,
-    backtick-identifier and backslash-escape awareness plus nesting
-    depth tracking. Depth counts parens AND ``CASE .. END`` blocks
-    (r7 ADVICE: a CASE WHEN .. THEN .. END inside a MERGE guard must
-    not look like the guard/action boundary or a new WHEN MATCHED
-    clause — CASE opens a scope exactly like a paren). ``END`` only
-    closes an OPEN case scope, so a bare column named ``end`` at top
-    level never drives the depth negative; a backtick-quoted
-    identifier like ``\`case\``` is opaque (review r8: without
-    backtick awareness it opened a phantom CASE scope and swallowed
-    the rest of the statement)."""
-    depth, case_depth, quote, btick, i = 0, 0, False, False, 0
-    while i < len(s):
-        ch = s[i]
-        if quote:
-            if ch == "\\":
-                yield i, ch, True, depth + case_depth
-                i += 2
-                continue
-            if ch == "'":
-                quote = False
-        elif btick:
-            if ch == "`":
-                btick = False
-            yield i, ch, True, depth + case_depth
-            i += 1
-            continue
-        elif ch == "'":
-            quote = True
-        elif ch == "`":
-            btick = True
-            yield i, ch, True, depth + case_depth
-            i += 1
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch in "cC" and _is_word_at(s, i, "case"):
-            case_depth += 1
-        elif ch in "eE" and case_depth and _is_word_at(s, i, "end"):
-            case_depth -= 1
-        yield i, ch, quote, depth + case_depth
-        i += 1
+from amplab_hive_spark.sqltext import mask, strip, strip_leading_comments, top_level
 
 
 def _split_top(s: str, sep: str) -> list[str]:
-    """Split on ``sep`` at paren depth 0 outside string literals."""
+    """Split on ``sep`` at paren/CASE depth 0 outside literals and
+    comments."""
     parts, start = [], 0
-    for i, ch, quote, depth in _scan(s):
-        if ch == sep and not quote and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
+    for i in top_level(mask(s), re.escape(sep)):
+        parts.append(s[start:i])
+        start = i + 1
     parts.append(s[start:])
     return parts
 
 
-def _find_keyword(s: str, word: str, start: int = 0) -> int:
-    """Index of the first top-level (depth-0, unquoted) occurrence of
-    ``word`` as a whole word; -1 if absent."""
-    wl, n = word.lower(), len(word)
-    for i, ch, quote, depth in _scan(s):
-        if i < start or quote or depth != 0:
-            continue
-        if (
-            s[i : i + n].lower() == wl
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (
-                i + n >= len(s)
-                or not (s[i + n].isalnum() or s[i + n] == "_")
-            )
-        ):
-            return i
-    return -1
+def _find_keyword(s: str, word: str) -> int:
+    """Index of the first top-level (depth-0, outside literals and
+    comments) occurrence of ``word`` as a whole word; -1 if absent."""
+    return next(top_level(mask(s), rf"\b{word}\b"), -1)
 
 
 def _split_where(body: str, stmt: str) -> tuple[str, str | None]:
     """Split ``body`` at its top-level WHERE. A present-but-empty
     condition is a syntax error, never TRUE — 'DELETE ... WHERE ;'
     must not silently become delete-everything."""
-    body = body.rstrip().rstrip(";").rstrip()
+    body = strip(strip(body).rstrip(";"))
     w = _find_keyword(body, "WHERE")
     if w < 0:
         return body, None
-    cond = body[w + 5 :].strip()
+    cond = strip(body[w + 5 :])
     if not cond:
         raise ValueError(f"{stmt}: WHERE requires a condition")
-    return body[:w].rstrip(), cond
+    return strip(body[:w]), cond
 
 
 def _assignments(text: str) -> dict[str, str]:
     out: dict[str, str] = {}
     for piece in _split_top(text, ","):
-        col, eq, expr = piece.partition("=")
-        if not eq or not col.strip() or not expr.strip():
+        eq = mask(piece).find("=")
+        col, expr = strip(piece[:eq]), strip(piece[eq + 1 :])
+        if eq < 0 or not col or not expr:
             raise ValueError(f"malformed SET assignment: {piece.strip()!r}")
-        col = col.strip()
         # backtick-quoted target identifier (`case` = 1): the verb
         # layer resolves PLAIN names against the schema
         if len(col) >= 2 and col[0] == col[-1] == "`":
             col = col[1:-1]
-        out[col] = expr.strip()
+        out[col] = expr
     return out
 
 
 def _rewrite_alias(expr: str, alias: str | None, canonical: str) -> str:
-    """Replace ``alias.`` qualifiers with ``canonical.`` OUTSIDE
-    string literals — a literal 'see src.example.com' must survive.
+    """Replace ``alias.`` qualifiers with ``canonical.`` outside
+    literals and comments — a literal 'see src.example.com' or
+    "src.b" must survive.
     The negative lookbehind keeps qualified tails intact: in
     ``db.tbl.col`` the ``tbl.`` is preceded by ``.`` and is NOT an
     alias use, so it must not be rewritten."""
     if not alias or alias.lower() == canonical:
         return expr
     pat = re.compile(rf"(?<![\w.]){re.escape(alias)}\s*\.", re.I)
-    # split into literal and non-literal segments; rewrite only the
-    # non-literal ones (re.S so literals with newlines stay literals)
-    segs = re.split(r"('(?:[^'\\]|\\.)*')", expr, flags=re.S)
-    return "".join(
-        seg if i % 2 else pat.sub(f"{canonical}.", seg)
-        for i, seg in enumerate(segs)
-    )
+    out, pos = [], 0
+    for m in pat.finditer(mask(expr)):
+        out += (expr[pos : m.start()], f"{canonical}.")
+        pos = m.end()
+    out.append(expr[pos:])
+    return "".join(out)
 
 
 _COMPACT_STMT = re.compile(
@@ -216,6 +152,9 @@ _MERGE_INTO = re.compile(
     r"^\s*MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+USING\s+",
     re.I | re.S,
 )
+_WHEN_MATCHED = re.compile(r"\s+(?:NOT\s+)?MATCHED\b", re.I)
+
+
 def _split_when(rest: str) -> list[str]:
     """Split the post-ON text at every top-level (depth-0, unquoted)
     ``WHEN`` that introduces a ``[NOT] MATCHED`` clause — the
@@ -224,15 +163,11 @@ def _split_when(rest: str) -> list[str]:
     is one clause body (the text after its WHEN). A string literal
     containing 'WHEN MATCHED ...' in the ON condition or a SET
     expression never splits (r6 ADVICE finding)."""
-    bounds: list[int] = []
-    pos = 0
-    while True:
-        i = _find_keyword(rest, "WHEN", pos)
-        if i < 0:
-            break
-        if re.match(r"\s+(?:NOT\s+)?MATCHED\b", rest[i + 4 :], re.I):
-            bounds.append(i)
-        pos = i + 4
+    masked = mask(rest)
+    bounds = [
+        i for i in top_level(masked, r"\bWHEN\b")
+        if _WHEN_MATCHED.match(masked, i + 4)
+    ]
     pieces = [rest[: bounds[0]] if bounds else rest]
     for j, b in enumerate(bounds):
         end = bounds[j + 1] if j + 1 < len(bounds) else len(rest)
@@ -246,7 +181,7 @@ def _parse_when_clause(clause: str) -> tuple[str, str | None, str]:
     AND condition; action_text follows THEN. The AND..THEN boundary
     is scanner-found, so a guard containing 'THEN' inside a string
     literal or parens survives."""
-    m = re.match(r"^\s*(NOT\s+)?MATCHED\b", clause, re.I)
+    m = re.match(r"^\s*(NOT\s+)?MATCHED\b", mask(clause), re.I)
     if not m:
         raise ValueError(f"unsupported MERGE WHEN clause: WHEN {clause.strip()[:60]}")
     kind = "not_matched" if m.group(1) else "matched"
@@ -254,16 +189,16 @@ def _parse_when_clause(clause: str) -> tuple[str, str | None, str]:
     then_at = _find_keyword(rest, "THEN")
     if then_at < 0:
         raise ValueError(f"unsupported MERGE WHEN clause: WHEN {clause.strip()[:60]}")
-    guard_text = rest[:then_at].strip()
+    guard_text = strip(rest[:then_at])
     guard = None
     if guard_text:
         am = re.match(r"^AND\b", guard_text, re.I)
-        if not am or not guard_text[am.end() :].strip():
+        if not am or not strip(guard_text[am.end() :]):
             raise ValueError(
                 f"unsupported MERGE WHEN clause: WHEN {clause.strip()[:60]}"
             )
-        guard = guard_text[am.end() :].strip()
-    action = rest[then_at + 4 :].strip().rstrip(";").strip()
+        guard = strip(guard_text[am.end() :])
+    action = strip(strip(rest[then_at + 4 :]).rstrip(";"))
     return kind, guard, action
 
 
@@ -291,27 +226,28 @@ def _parse_insert_action(action: str) -> tuple[list[str] | None, list[str] | Non
     rest = rest.lstrip()
     if not rest.startswith("("):
         raise ValueError("unsupported MERGE syntax — INSERT VALUES requires (...)")
-    for i, ch, quote, depth in _scan(rest):
-        if ch == ")" and not quote and depth == 0:
-            if rest[i + 1 :].strip():
-                raise ValueError(
-                    f"unsupported MERGE syntax — trailing text after INSERT "
-                    f"VALUES: {rest[i + 1 :].strip()[:40]!r}"
-                )
-            return cols, [e.strip() for e in _split_top(rest[1:i], ",")]
-    raise ValueError("unsupported MERGE syntax — unbalanced ( in INSERT VALUES")
+    masked = mask(rest)
+    i = next(top_level(masked, r"\)", 1), -1)
+    if i < 0:
+        raise ValueError("unsupported MERGE syntax — unbalanced ( in INSERT VALUES")
+    if masked[i + 1 :].strip():
+        raise ValueError(
+            f"unsupported MERGE syntax — trailing text after INSERT "
+            f"VALUES: {rest[i + 1 :].strip()[:40]!r}"
+        )
+    return cols, [strip(e) for e in _split_top(rest[1:i], ",")]
 
 
 def _parse_using_source(rest: str) -> tuple[str, str]:
     """rest starts at the USING operand: a table name or a
     parenthesized subquery (arbitrary nesting, quote-aware). Returns
     (source_text, remainder)."""
-    rest = rest.lstrip()
+    rest = strip_leading_comments(rest)
     if rest.startswith("("):
-        for i, ch, quote, depth in _scan(rest):
-            if ch == ")" and not quote and depth == 0:
-                return rest[: i + 1], rest[i + 1 :]
-        raise ValueError("unsupported MERGE syntax — unbalanced ( in USING")
+        i = next(top_level(mask(rest), r"\)", 1), -1)
+        if i < 0:
+            raise ValueError("unsupported MERGE syntax — unbalanced ( in USING")
+        return rest[: i + 1], rest[i + 1 :]
     m = re.match(r"[\w.]+", rest)
     if not m:
         raise ValueError("unsupported MERGE syntax — expected USING <table|(subquery)>")
@@ -425,7 +361,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
         raise ValueError("unsupported MERGE syntax — missing ON condition")
     rest = rest[on_kw + 2 :]
     pieces = _split_when(rest)
-    on = pieces[0].strip()
+    on = strip(pieces[0])
     if len(pieces) < 2:
         raise ValueError("MERGE requires at least one WHEN clause")
     if _mor_keys(spark, name) is not None:

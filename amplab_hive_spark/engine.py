@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from amplab_hive_spark.catalog import load_tables
 from amplab_hive_spark.session import get_spark
+from amplab_hive_spark.sqltext import strip_leading_comments
 
 
 class Engine:
@@ -64,6 +65,10 @@ class Engine:
         # Spark's native conf-only SET cannot serve
         # (ql/processors/SetProcessor.java:115)
         text = self.variables.substitute(self.spark, text)
+        # leading comments go ONCE, here: every shim below matches its
+        # statement head at the first token, as Spark's own parser
+        # skips them (sqltext — the only home of the lexical rules)
+        text = strip_leading_comments(text)
         set_df = self.variables.handle_set(self.spark, text)
         if set_df is not None:
             return set_df
@@ -72,14 +77,11 @@ class Engine:
         # HiveServer2's JDBC path — so it lives here on the Engine
         # surface, output as the one-column 'DFS Output' result set.
         # Admin-gated under enforcement (dfs.py / enforce_dfs).
-        from amplab_hive_spark.variables import strip_leading_comments
-
-        head = strip_leading_comments(text).strip()
-        if head[:3].lower() == "dfs" and (
-                len(head) == 3 or head[3] in " \t\n;"):
+        if text[:3].lower() == "dfs" and (
+                text[3:4] in ("", ";") or text[3:4].isspace()):
             from amplab_hive_spark.dfs import run_dfs
 
-            return run_dfs(self.spark, head[3:].strip().rstrip(";"))
+            return run_dfs(self.spark, text[3:].strip().rstrip(";"))
         if self.macros.handle_statement(text):
             return self.spark.range(0).select()  # empty result, DDL-style
         expanded = self.macros.expand(text)

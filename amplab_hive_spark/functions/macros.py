@@ -9,9 +9,11 @@ pre-parse shim (SURVEY.md §7.2): expansion happens on the SQL text
 before ``spark.sql``, producing a plain Catalyst expression.
 
 Expansion rules:
-- macro calls are expanded everywhere outside string literals and
-  comments, innermost-first, with balanced-paren argument parsing
-  (arguments may themselves contain calls, commas inside parens);
+- macro calls are expanded everywhere outside string literals,
+  quoted identifiers and comments (``sqltext.mask``), with
+  balanced-paren argument parsing (arguments may themselves contain
+  calls, commas inside parens); each argument and the body are
+  trimmed of surrounding whitespace and comments;
 - each parameter is substituted as a whole identifier into the body,
   with the argument text wrapped in parens (call-by-name, like the
   reference: the macro body is an AST template, not a function);
@@ -27,10 +29,12 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from amplab_hive_spark.sqltext import mask, strip, top_level
+
 _MAX_DEPTH = 16
 
-# Head only — the parameter list is parsed with the balanced-paren
-# scanner (``_parse_args``) so Hive-legal parameterized types like
+# Head only — the parameter list is parsed at paren depth
+# (``_parse_args``) so Hive-legal parameterized types like
 # ``m(x DECIMAL(10,2))`` aren't cut at the inner ')'.
 _CREATE_RE = re.compile(
     r"^\s*CREATE\s+TEMPORARY\s+MACRO\s+(\w+)\s*\(",
@@ -72,8 +76,8 @@ class MacroRegistry:
             # Balanced scan from the '(' — commas inside DECIMAL(10,2)
             # etc. stay within their own parens (depth > 1).
             param_decls, after = self._parse_args(stripped, m.end() - 1)
-            body = stripped[after:]
-            if not body.strip():
+            body = strip(stripped[after:])
+            if not body:
                 raise MacroError(f"macro {name} has an empty body")
             params = []
             for p in param_decls:
@@ -89,21 +93,9 @@ class MacroRegistry:
             # every declared parameter must appear in the body — the
             # reference rejects unused parameters up front
             # (ql/parse/MacroSemanticAnalyzer.java, clientnegative/
-            # macro_unused_parameter.q). String literals are masked
-            # first so a parameter named inside quoted text does not
-            # count as used (review r10).
-            masked_body = re.sub(
-                r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"", " ", body
-            )
-            # comments are masked too: a parameter mentioned only in
-            # `--` or `/* */` commentary is not used (ADVICE r10).
-            # Strings go FIRST so a '--' inside a literal does not
-            # swallow the rest of the line; BLOCK comments before LINE
-            # comments so a '--' inside /* */ does not eat the comment
-            # terminator and everything after it (review r11:
-            # `x + /* note -- see */ y` must count y as used).
-            masked_body = re.sub(r"/\*.*?\*/", " ", masked_body, flags=re.S)
-            masked_body = re.sub(r"--[^\n]*", " ", masked_body)
+            # macro_unused_parameter.q). A parameter named only inside
+            # a literal or a comment is not used.
+            masked_body = mask(body)
             unused = [
                 p for p in params
                 if not re.search(rf"\b{re.escape(p)}\b", masked_body, re.IGNORECASE)
@@ -113,7 +105,7 @@ class MacroRegistry:
                     f"macro {name} declares unused parameter(s) "
                     f"{', '.join(unused)} (macro_unused_parameter.q)"
                 )
-            self._macros[name.lower()] = Macro(name.lower(), tuple(params), body.strip())
+            self._macros[name.lower()] = Macro(name.lower(), tuple(params), body)
             return True
         m = _DROP_RE.match(sql.strip().rstrip(";"))
         if m:
@@ -141,115 +133,45 @@ class MacroRegistry:
         raise MacroError("macro expansion did not terminate (recursive macros?)")
 
     def _expand_once(self, sql: str) -> str:
+        # a call is a macro name, not qualified ('t.f(1)'), then '('
+        calls = re.compile(
+            r"(?<![\w.])(" + "|".join(map(re.escape, self._macros)) + r")\s*\(",
+            re.IGNORECASE,
+        )
+        if not calls.search(sql):  # raw prefilter: most text has no call
+            return sql
+        masked = mask(sql)
         out: list[str] = []
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"', "`"):  # string literal / quoted ident
-                j = self._skip_quoted(sql, i)
-                out.append(sql[i:j])
-                i = j
-                continue
-            if sql.startswith("--", i):
-                j = sql.find("\n", i)
-                j = n if j < 0 else j
-                out.append(sql[i:j])
-                i = j
-                continue
-            if sql.startswith("/*", i):
-                j = sql.find("*/", i + 2)
-                j = n if j < 0 else j + 2
-                out.append(sql[i:j])
-                i = j
-                continue
-            if ch.isalpha() or ch == "_":
-                j = i
-                while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                    j += 1
-                word = sql[i:j]
-                macro = self._macros.get(word.lower())
-                # not a macro call if no '(' follows, or preceded by
-                # '.' (qualified column) — leave the word alone.
-                k = j
-                while k < n and sql[k].isspace():
-                    k += 1
-                prev = out[-1][-1:] if out and out[-1] else ""
-                if macro is None or k >= n or sql[k] != "(" or prev == ".":
-                    out.append(word)
-                    i = j
-                    continue
-                args, end = self._parse_args(sql, k)
-                if len(args) != len(macro.params):
-                    raise MacroError(
-                        f"macro {macro.name} expects {len(macro.params)} args, got {len(args)}"
-                    )
-                out.append("(" + self._substitute(macro, args) + ")")
-                i = end
-                continue
-            out.append(ch)
-            i += 1
+        done = 0
+        while m := calls.search(masked, done):
+            macro = self._macros[m.group(1).lower()]
+            args, end = self._parse_args(sql, m.end() - 1)
+            if len(args) != len(macro.params):
+                raise MacroError(
+                    f"macro {macro.name} expects {len(macro.params)} args, got {len(args)}"
+                )
+            out += (sql[done : m.start()], "(" + self._substitute(macro, args) + ")")
+            done = end
+        out.append(sql[done:])
         return "".join(out)
 
     @staticmethod
-    def _skip_quoted(sql: str, i: int) -> int:
-        """Skip a ``'…'`` / ``"…"`` string literal or a backticked
-        identifier, honouring BOTH escape forms Spark accepts:
-        doubled quotes and (for string literals, non-ANSI mode)
-        backslash escapes — ``'don\\'t'`` must not end at the escaped
-        quote."""
-        q = sql[i]
-        j = i + 1
-        while j < len(sql):
-            ch = sql[j]
-            if ch == "\\" and q != "`":
-                j += 2
-                continue
-            if ch == q:
-                if j + 1 < len(sql) and sql[j + 1] == q:  # doubled quote escape
-                    j += 2
-                    continue
-                return j + 1
-            j += 1
-        return len(sql)
-
-    def _parse_args(self, sql: str, open_paren: int) -> tuple[list[str], int]:
+    def _parse_args(sql: str, open_paren: int) -> tuple[list[str], int]:
         """Parse a balanced argument list starting at ``(``; returns
-        (args, index-after-close-paren)."""
-        depth = 0
+        (args, index-after-close-paren). An empty last slot is not an
+        argument (``m()`` has none)."""
+        masked = mask(sql[open_paren:])
         args: list[str] = []
-        cur: list[str] = []
-        i = open_paren
-        while i < len(sql):
-            ch = sql[i]
-            if ch in ("'", '"', "`"):
-                j = self._skip_quoted(sql, i)
-                cur.append(sql[i:j])
-                i = j
+        start = 1
+        for i in top_level(masked, r"[,)]", 1):
+            arg = strip(sql[open_paren + start : open_paren + i])
+            start = i + 1
+            if masked[i] == ",":
+                args.append(arg)
                 continue
-            if sql.startswith("/*", i):
-                j = sql.find("*/", i + 2)
-                j = len(sql) if j < 0 else j + 2
-                cur.append(sql[i:j])
-                i = j
-                continue
-            if ch == "(":
-                depth += 1
-                if depth > 1:
-                    cur.append(ch)
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    text = "".join(cur).strip()
-                    if text:
-                        args.append(text)
-                    return args, i + 1
-                cur.append(ch)
-            elif ch == "," and depth == 1:
-                args.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-            i += 1
+            if arg:
+                args.append(arg)
+            return args, open_paren + i + 1
         raise MacroError("unbalanced parentheses in macro call")
 
     @staticmethod
@@ -260,11 +182,11 @@ class MacroRegistry:
         # that itself contains a parameter-named column must not be
         # re-substituted (macro hygiene). Case-INSENSITIVE, matching
         # HiveQL identifier semantics (body may spell a parameter in
-        # a different case than its declaration), and applied only to
-        # the UNQUOTED segments of the body — a parameter name inside
-        # one of the body's own string literals is content, not an
-        # identifier (Hive inlines at the AST level, so body literals
-        # are never touched).
+        # a different case than its declaration), and applied only
+        # outside the body's literals and comments — a parameter name
+        # inside one of the body's own string literals is content,
+        # not an identifier (Hive inlines at the AST level, so body
+        # literals are never touched).
         mapping = {p.lower(): a for p, a in zip(macro.params, args)}
         pattern = re.compile(
             "|".join(
@@ -274,21 +196,13 @@ class MacroRegistry:
             re.IGNORECASE,
         )
 
-        def sub_segment(seg: str) -> str:
-            return pattern.sub(lambda m: f"({mapping[m.group(0).lower()]})", seg)
-
         body = macro.body
         out: list[str] = []
-        i, n, seg_start = 0, len(body), 0
-        while i < n:
-            if body[i] in ("'", '"', "`"):
-                out.append(sub_segment(body[seg_start:i]))
-                j = MacroRegistry._skip_quoted(body, i)
-                out.append(body[i:j])
-                i = seg_start = j
-            else:
-                i += 1
-        out.append(sub_segment(body[seg_start:]))
+        pos = 0
+        for m in pattern.finditer(mask(body)):
+            out += (body[pos : m.start()], f"({mapping[m.group(0).lower()]})")
+            pos = m.end()
+        out.append(body[pos:])
         return "".join(out)
 
 

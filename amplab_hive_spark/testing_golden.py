@@ -3,7 +3,8 @@
 against checked-in .q.out goldens through SortPrintStream).
 
 Faithful mechanics, Spark-first engine:
-- a .q file holds one or more ``;``-separated statements, run in
+- a .q file holds one or more ``;``-separated statements
+  (``sqltext.split_statements``, shared with the CLI), run in
   order through ``Engine.sql`` (so CREATE TEMPORARY MACRO etc.
   compose);
 - the LAST statement's result is rendered Hive-style — tab-separated
@@ -26,98 +27,11 @@ from __future__ import annotations
 import datetime as dt
 import math
 import os
-import re
 from decimal import Decimal
 
 from pyspark.sql import DataFrame
 
-
-_CMD_HEAD = re.compile(r"(?:!|(?:dfs|source)(?=[\s;]|$))", re.IGNORECASE)
-
-
-def split_statements(text: str) -> list[str]:
-    """Split on ``;`` outside quotes/comments (good enough for the
-    golden corpus — no procedural blocks in HiveQL).
-
-    Statements that BEGIN with a CLI command head (``!``, ``dfs``,
-    ``source`` — CliDriver.processCmd's non-SQL branches) are split
-    RAW to the next ``;`` or newline, with no quote/comment
-    processing: the reference's processLine does a plain
-    ``line.split(";")`` (CliDriver.java:358), so ``! tar --version``
-    must not lose its ``--version`` to the SQL comment rule and an
-    apostrophe in a shell command must not open a SQL string (review
-    r13 pass 7). Hive .q scripts carry dfs/source lines too, so the
-    golden harness shares the rule. ``blank`` tracks
-    nothing-but-whitespace/comments-so-far in O(1) (pass 8: the
-    join-based check was quadratic, and a LEADING /* */ block
-    comment must not defeat command detection — comments count as
-    blank, mirroring strip_leading_comments downstream)."""
-    out: list[str] = []
-    cur: list[str] = []
-    i, n = 0, len(text)
-    blank = True  # only whitespace/comments accumulated so far
-    while i < n:
-        ch = text[i]
-        if blank and ch in "!dDsS" and _CMD_HEAD.match(text, i):
-            # command statement: raw to ';' or end-of-line — commands
-            # are line-oriented in the reference
-            stops = [x for x in (text.find(";", i), text.find("\n", i))
-                     if x >= 0]
-            j = min(stops) if stops else n
-            seg = ("".join(cur) + text[i:j]).strip()  # keep a leading
-            cur = []                                  # comment prefix
-            if seg:
-                out.append(seg)
-            i = j + 1
-            continue
-        if text.startswith("/*", i):
-            # block comment at ANY position (review r13 pass 9: only
-            # handling the leading case left a ';' inside a
-            # mid-statement /* */ splitting the statement in two):
-            # consumed whole, part of the statement text, and 'blank'
-            # unchanged — comments never count as content, so command
-            # detection still fires after a leading one
-            from amplab_hive_spark.variables import scan_block_comment
-
-            j = scan_block_comment(text, i)
-            if j is not None:
-                cur.append(text[i:j])
-                i = j
-                continue
-            # unterminated: fall through as plain text
-        if ch in ("'", '"'):
-            blank = False
-            j = i + 1
-            while j < n and text[j] != ch:
-                j += 2 if text[j] == "\\" else 1
-            cur.append(text[i : min(j + 1, n)])
-            i = j + 1
-            continue
-        if text.startswith("--", i):
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            i = j
-            continue
-        if ch == ";":
-            # 'blank' means the segment holds nothing but comments and
-            # whitespace — emitting it would hand pure comment text to
-            # the SQL parser (review r13 pass 9: a trailing
-            # '/* license */;' aborted a whole run)
-            stmt = "".join(cur).strip()
-            if stmt and not blank:
-                out.append(stmt)
-            cur = []
-            blank = True
-            i += 1
-            continue
-        cur.append(ch)
-        if blank and not ch.isspace():
-            blank = False
-        i += 1
-    tail = "".join(cur).strip()
-    if tail and not blank:
-        out.append(tail)
-    return out
+from amplab_hive_spark.sqltext import split_statements
 
 
 def render_value(v) -> str:

@@ -63,50 +63,6 @@ DEFAULT_DEPTH = 40
 # CommandProcessorFactory/SetProcessor part[0]/part[1]).
 _SET_STMT = re.compile(r"^\s*set\s+(?P<body>\S.*)$", re.IGNORECASE | re.DOTALL)
 
-def scan_block_comment(text: str, i: int) -> "Optional[int]":
-    """``text[i:]`` starts with ``/*``: return the index just past
-    the matching ``*/`` honoring NESTING (Spark's lexer nests
-    bracketed comments, SPARK-28880 — a non-greedy regex stops at the
-    first ``*/``), or None if unterminated. Shared by the statement
-    splitter and the comment stripper so the two scanners can never
-    drift (review r13 pass 9)."""
-    n = len(text)
-    depth, j = 1, i + 2
-    while j < n and depth:
-        if text.startswith("/*", j):
-            depth, j = depth + 1, j + 2
-        elif text.startswith("*/", j):
-            depth, j = depth - 1, j + 2
-        else:
-            j += 1
-    return None if depth else j
-
-
-def strip_leading_comments(text: str) -> str:
-    """Leading comments must not defeat the SET interception (review
-    r13 — Spark's own SET parser strips them, so '/* banner */ SET
-    hivevar:k=v' would otherwise silently become a conf named
-    'hivevar:k'): -- line comments and /* */ block comments, the
-    latter NESTED like Spark's lexer (SPARK-28880 — a non-greedy
-    regex stops at the first */ and leaves a bypassing remnant,
-    review r13 pass 2)."""
-    i, n = 0, len(text)
-    while True:
-        while i < n and text[i].isspace():
-            i += 1
-        if text.startswith("--", i):
-            j = text.find("\n", i)
-            if j == -1:
-                return ""  # statement is all comment
-            i = j + 1
-        elif text.startswith("/*", i):
-            j = scan_block_comment(text, i)
-            if j is None:  # unterminated: not a comment we can strip
-                return text[i:]
-            i = j
-        else:
-            return text[i:]
-
 
 class VariableRegistry:
     """Per-Engine session variable state: the hivevar map and the
@@ -169,9 +125,13 @@ class VariableRegistry:
     def handle_set(self, spark: SparkSession, text: str) -> Optional[DataFrame]:
         """Handle the PREFIXED SET forms; return None for everything
         else (incl. bare SET — Spark's native conf SET serves it).
+        ``text`` arrives with its leading comments already stripped
+        (Engine.sql, ``sqltext.strip_leading_comments``), so
+        '/* banner */ SET hivevar:k=v' cannot bypass the
+        interception into a conf named 'hivevar:k'.
         Returns Spark's native SET result shape (key, value strings)
         so CLI/JDBC clients render all forms identically."""
-        stripped = strip_leading_comments(text).strip().rstrip(";").strip()
+        stripped = text.strip().rstrip(";").strip()
         # dump forms, whitespace-tolerant ('SET   -v' is the same
         # statement to Spark's parser) but with '-v' CASE-SENSITIVE:
         # Spark 4 rejects 'SET -V' with INVALID_SET_SYNTAX, and the

@@ -33,6 +33,7 @@ _FAST_MODULES = {
     "test_grading_window.py",  # driver-window contract sanity
     "test_testdata_contract.py",
     "test_statement.py",       # server-front session/cancel/cursor + MOR UPDATE type
+    "test_sqltext.py",         # the one SQL lexer the pre-parse shims share
 }
 
 

@@ -727,6 +727,12 @@ def test_autocompact_mode_auto_follows_initiator_rule(spark, plain_table):
     Tiny point deltas against the 100-row base stay minor (base
     untouched); forcing the threshold to 0 makes the next statement
     trigger major."""
+    # a base of fixed size: the fixture writes one file per core, so
+    # on a small host its bytes shrink until the point deltas below
+    # cross the 10% ratio and the minor branch is never taken
+    spark.range(100).selectExpr(
+        "id AS k", "id % 10 AS grp", "concat('v-', id) AS label"
+    ).repartition(32).write.mode("overwrite").saveAsTable(plain_table)
     acid.update_mor(spark, plain_table, "k = 1", {"label": "'a'"}, ["k"])
     base_before = _base_state(spark, plain_table)
     acid.delete_mor(spark, plain_table, "k = 2", ["k"],

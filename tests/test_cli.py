@@ -215,7 +215,7 @@ def test_split_statements_command_mode():
     newline — '--' long options are not SQL comments and an
     apostrophe does not open a SQL string inside a '!'/dfs/source
     statement (CliDriver's plain line.split(';'))."""
-    from amplab_hive_spark.testing_golden import split_statements
+    from amplab_hive_spark.sqltext import split_statements
 
     assert split_statements("! tar --version; SELECT 1") == \
         ["! tar --version", "SELECT 1"]
@@ -234,7 +234,7 @@ def test_split_statements_command_mode_after_block_comment():
     """review r13 pass 8: a LEADING /* */ block comment must not
     defeat command-mode ('--' eaten as SQL comment, apostrophe
     opening a string) — comments count as blank at statement start."""
-    from amplab_hive_spark.testing_golden import split_statements
+    from amplab_hive_spark.sqltext import split_statements
 
     assert split_statements("/* note */ dfs -ls --color; SELECT 1") == \
         ["/* note */ dfs -ls --color", "SELECT 1"]
@@ -268,7 +268,7 @@ def test_split_statements_mid_statement_comment_and_comment_only():
     made fixable): a ';' inside a mid-statement /* */ comment is not
     a boundary, and comment-only segments are never emitted as
     statements."""
-    from amplab_hive_spark.testing_golden import split_statements
+    from amplab_hive_spark.sqltext import split_statements
 
     assert split_statements("SELECT /* a;b */ 1; SELECT 2") == \
         ["SELECT /* a;b */ 1", "SELECT 2"]

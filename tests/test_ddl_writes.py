@@ -902,3 +902,36 @@ def test_compact_table_zero_row_files_cleaned(spark, wh):
         assert spark.table("compact_zero").count() == 1
     finally:
         spark.sql("DROP TABLE IF EXISTS compact_zero")
+
+
+def test_update_delete_on_temp_view_shadowing_partitioned_table(spark, wh):
+    """A temp view that shadows a partitioned table's name
+    is what UPDATE/DELETE on that name read and write, so its partition
+    columns (none) are the ones that count — the catalog fast path used
+    the table's and rewrote the view's files partition-scoped, losing
+    the rows outside the touched partitions."""
+    from amplab_hive_spark.engine import Engine
+
+    spark.sql("DROP TABLE IF EXISTS shadowed_part")
+    spark.sql(
+        f"CREATE TABLE shadowed_part (k INT, v STRING, p INT) USING parquet "
+        f"PARTITIONED BY (p) LOCATION '{wh}/shadowed_part'"
+    )
+    spark.sql("INSERT INTO shadowed_part VALUES (9, 'table', 9)")
+    rows = [(1, "a", 1), (2, "b", 2), (3, "c", 3)]
+    spark.createDataFrame(rows, "k INT, v STRING, p INT").write.parquet(f"{wh}/shadow_view")
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW shadowed_part USING parquet "
+        f"OPTIONS (path '{wh}/shadow_view')"
+    )
+    try:
+        assert ddl._partition_columns(spark, "shadowed_part") == []
+        eng = Engine(spark)
+        assert eng.sql("UPDATE shadowed_part SET v = 'z' WHERE k = 1").first().updated == 1
+        assert eng.sql("DELETE FROM shadowed_part WHERE k = 2").first().deleted == 1
+        got = sorted(tuple(r) for r in spark.read.parquet(f"{wh}/shadow_view").collect())
+        assert got == [(1, "z", 1), (3, "c", 3)]
+    finally:
+        spark.catalog.dropTempView("shadowed_part")
+    assert [tuple(r) for r in spark.table("shadowed_part").collect()] == [(9, "table", 9)]
+    spark.sql("DROP TABLE IF EXISTS shadowed_part")

@@ -10,7 +10,8 @@ import os
 import pytest
 
 from amplab_hive_spark.engine import Engine
-from amplab_hive_spark.testing_golden import run_q_file, split_statements
+from amplab_hive_spark.sqltext import split_statements
+from amplab_hive_spark.testing_golden import run_q_file
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
 Q_FILES = sorted(glob.glob(os.path.join(GOLDEN_DIR, "*.q")))

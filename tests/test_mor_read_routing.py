@@ -370,6 +370,29 @@ def test_auto_publish_skips_corrupt_table(spark, engine, mor_table, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {bad}")
 
 
+def test_auto_publish_skips_table_whose_second_delta_is_corrupt(
+    spark, engine, mor_table
+):
+    """The corrupt-delta probe reads every delta footer,
+    not just the first — a table whose LATER delta is unreadable is
+    skipped at publish time too."""
+    import os
+
+    engine.sql(f"UPDATE {mor_table} SET v = v + 1 WHERE k = 1")
+    paths = [p for _, _, p in acid._scan_deltas(acid._delta_path(spark, mor_table))]
+    assert len(paths) >= 2
+    for root, _, files in os.walk(paths[1]):
+        for f in files:
+            if f.endswith(".parquet"):
+                with open(os.path.join(root, f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+    try:
+        assert mor_table not in acid.auto_publish_mor_views(spark)
+        assert mor_table not in acid._PUBLISHED
+    finally:
+        acid.unpublish_mor_views(spark, [mor_table])
+
+
 def test_auto_publish_keeps_prior_registration_on_sync_error(
     engine, spark, mor_table, monkeypatch
 ):

@@ -20,7 +20,7 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from amplab_hive_spark.functions.macros import MacroRegistry
-from amplab_hive_spark.testing_golden import split_statements
+from amplab_hive_spark.sqltext import split_statements
 
 # ---------------------------------------------------------------- 1
 
