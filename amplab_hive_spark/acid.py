@@ -80,6 +80,7 @@ from amplab_hive_spark.ddl import (
     _set_columns,
     _table_location,
 )
+from amplab_hive_spark.session import local_rows
 
 _DELTA_DIR = "_delete_delta"
 _MANIFEST = "_keys.json"
@@ -880,8 +881,8 @@ def show_compactions(spark: SparkSession) -> DataFrame:
             t.database or db, t.name, None, ctype, state,
             len(txns), len(entries), live_bytes,
         ))
-    return spark.createDataFrame(
-        rows,
+    return local_rows(
+        spark, rows,
         "database string, table string, partition string, type string, "
         "state string, delta_txns int, delta_files int, delta_bytes bigint",
     )
@@ -903,8 +904,8 @@ def show_transactions(spark: SparkSession) -> DataFrame:
     same way SHOW LOCKS's minimal row did — SHOW COMPACTIONS already
     reports the pending inline-compaction work the queue side would
     show)."""
-    return spark.createDataFrame(
-        [], "txnid bigint, state string, user string, hostname string"
+    return local_rows(
+        spark, [], "txnid bigint, state string, user string, hostname string"
     )
 
 
@@ -979,7 +980,7 @@ def show_locks(
     else:
         # raise the reference's resolution error if the table is absent
         spark.table(_qualify(spark, table))
-    return spark.createDataFrame(rows, schema)
+    return local_rows(spark, rows, schema)
 
 
 def compact_mor(spark: SparkSession, name: str, mode: str = "major") -> int:

@@ -67,6 +67,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_rows
+
 _RESERVED = {"all", "default", "none"}
 _BUILTIN = {"admin", "public"}
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
@@ -276,10 +278,6 @@ def _table_exists(spark: SparkSession, name: str) -> tuple[str, str]:
     else:
         db, tbl = spark.catalog.currentDatabase(), name
     return db.lower(), tbl.lower()
-
-
-def _df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    return spark.createDataFrame(rows, schema)
 
 
 def _now() -> int:
@@ -567,11 +565,11 @@ def set_role(spark: SparkSession, name: str) -> None:
 def show_roles(spark: SparkSession) -> DataFrame:
     store = _load(spark)
     names = sorted(_BUILTIN | set(store["roles"]))
-    return _df(spark, [(n,) for n in names], "role string")
+    return local_rows(spark, [(n,) for n in names], "role string")
 
 
 def show_current_roles(spark: SparkSession) -> DataFrame:
-    return _df(
+    return local_rows(
         spark, [(r,) for r in sorted(current_roles(spark))], "role string"
     )
 
@@ -591,7 +589,7 @@ def show_role_grant(
     # explicitly (one row per role, never a duplicate — review r9)
     if ptype == "USER" and not any(r[0] == "public" for r in rows):
         rows.append(("public", False, 0, "hive"))
-    return _df(spark, sorted(rows), _ROLE_GRANT_SCHEMA)
+    return local_rows(spark, sorted(rows), _ROLE_GRANT_SCHEMA)
 
 
 def show_principals(spark: SparkSession, role: str) -> DataFrame:
@@ -602,7 +600,7 @@ def show_principals(spark: SparkSession, role: str) -> DataFrame:
          g["grantor"], "USER", g["grant_time"])
         for g in store["role_grants"] if g["role"] == r
     ]
-    return _df(spark, sorted(rows), _PRINCIPALS_SCHEMA)
+    return local_rows(spark, sorted(rows), _PRINCIPALS_SCHEMA)
 
 
 def show_grant(
@@ -633,7 +631,7 @@ def show_grant(
             p["principal"], p["principal_type"], p["privilege"],
             p["grant_option"], p["grant_time"], p["grantor"],
         ))
-    return _df(spark, sorted(rows, key=repr), _GRANT_SCHEMA)
+    return local_rows(spark, sorted(rows, key=repr), _GRANT_SCHEMA)
 
 
 def grants_for(
@@ -700,7 +698,7 @@ _SHOW_GRANT = re.compile(
 
 
 def _ok(spark: SparkSession) -> DataFrame:
-    return spark.range(0).selectExpr("CAST(id AS STRING) AS result")
+    return local_rows(spark, [], "result string NOT NULL")
 
 
 def handle(spark: SparkSession, text: str) -> DataFrame | None:

@@ -32,6 +32,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_rows
 from amplab_hive_spark.sqltext import mask
 
 
@@ -266,7 +267,7 @@ def _partition_membership(df, pcols, parts):
     # inference would fail on a column that is None in every tuple
     # (the null-partition case eqNullSafe exists to support)
     tuple_schema = StructType([df.schema[c] for c in pcols])
-    tuples = spark.createDataFrame([tuple(p) for p in parts], schema=tuple_schema)
+    tuples = local_rows(spark, [tuple(p) for p in parts], tuple_schema)
     cond = reduce(
         and_, [df[c].eqNullSafe(tuples[c]) for c in pcols]
     )
@@ -1079,7 +1080,7 @@ def partition_values(spark: SparkSession, name: str) -> DataFrame:
             vals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
         rows.append(tuple(vals.get(c) for c in pcols))
     schema_str = ", ".join(f"{c} string" for c in pcols)
-    raw = spark.createDataFrame(rows or [], schema=schema_str)
+    raw = local_rows(spark, rows, schema_str)
     target_types = dict(spark.table(name).select(*pcols).dtypes)
     return raw.select(*[F.col(c).cast(target_types[c]).alias(c) for c in pcols])
 

@@ -29,6 +29,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_rows
+
 DFS_RESULT_HEADER = "DFS Output"  # DfsProcessor.java:44
 
 _capture_lock = threading.Lock()
@@ -94,7 +96,4 @@ def run_dfs(spark: SparkSession, args_text: str) -> DataFrame:
         raise DfsError(
             f"Command failed with exit code = {rc}"
             + (f"\n{tail}" if tail else ""), rc)
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType([StructField(DFS_RESULT_HEADER, StringType())])
-    return spark.createDataFrame(lines, schema)
+    return local_rows(spark, lines, f"`{DFS_RESULT_HEADER}` string")

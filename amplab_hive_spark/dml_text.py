@@ -70,6 +70,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_rows
 from amplab_hive_spark.sqltext import mask, strip, strip_leading_comments, top_level
 
 
@@ -137,8 +138,11 @@ def _rewrite_alias(expr: str, alias: str | None, canonical: str) -> str:
     return "".join(out)
 
 
+# the head patterns below run on the statement's sqltext.mask, so a
+# comment between keywords is blank and the mode literal is '#'s
+_MASKED_HEADS = re.compile(r"\s*(?:ALTER|SHOW|UPDATE|DELETE)\b", re.I)
 _COMPACT_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+COMPACT\s+'(\w+)'\s*;?\s*$", re.I
+    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+COMPACT\s+(#+)\s*;?\s*$", re.I
 )
 _SHOW_COMPACTIONS_STMT = re.compile(r"^\s*SHOW\s+COMPACTIONS\s*;?\s*$", re.I)
 _SHOW_TXNS_STMT = re.compile(r"^\s*SHOW\s+TRANSACTIONS\s*;?\s*$", re.I)
@@ -274,7 +278,10 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
     from amplab_hive_spark.acid import update_mor as _update_mor
     from amplab_hive_spark.ddl import delete_from, merge_into, update_table
 
-    if _SHOW_COMPACTIONS_STMT.match(text):
+    # mask only a statement this shim may claim: an INSERT of many
+    # literals never pays for the lexer here
+    masked = mask(text) if _MASKED_HEADS.match(text) else text
+    if _SHOW_COMPACTIONS_STMT.match(masked):
         # DDLTask.showCompactions: the queue listing — here the
         # PENDING inline-compaction work per merge-on-read table
         # (acid.show_compactions documents the column mapping)
@@ -282,7 +289,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
 
         return show_compactions(spark)
 
-    if _SHOW_TXNS_STMT.match(text):
+    if _SHOW_TXNS_STMT.match(masked):
         # DDLTask.showTxns: the open-transaction listing — empty by
         # design in an inline-commit engine (acid.show_transactions
         # documents the honest mapping)
@@ -290,7 +297,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
 
         return show_transactions(spark)
 
-    m = _SHOW_LOCKS_STMT.match(text)
+    m = _SHOW_LOCKS_STMT.match(masked)
     if m:
         # DDLTask.showLocks: live lock-manager state — here the
         # warehouse sidecar flocks, the only locks this inline engine
@@ -299,16 +306,17 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
 
         return show_locks(spark, m.group(1))
 
-    m = _COMPACT_STMT.match(text)
+    m = _COMPACT_STMT.match(masked)
     if m:
         # HiveQL's ALTER TABLE .. COMPACT 'major'|'minor'
         # (DDLSemanticAnalyzer -> compactor Worker): major folds the
         # deltas into the base; minor consolidates the deltas without
         # a base rewrite (CompactorMR's two modes).
-        mode = m.group(2).lower()
-        if mode not in ("major", "minor"):
+        literal = text[m.start(2) : m.end(2)]
+        mode = literal[1:-1].lower()
+        if literal[0] not in "'\"" or mode not in ("major", "minor"):
             raise ValueError(
-                f"COMPACT expects 'major' or 'minor' (got {m.group(2)!r})"
+                f"COMPACT expects 'major' or 'minor' (got {literal})"
             )
         # COMPACT is not Spark grammar, so the parse-tree enforcement
         # gate never sees it — gate the file-rewriting verb here
@@ -317,9 +325,9 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
 
         enforce_maintenance(spark, m.group(1))
         n = _compact_mor(spark, m.group(1), mode=mode)
-        return spark.createDataFrame([(n,)], "compacted_deltas bigint")
+        return local_rows(spark, [(n,)], "compacted_deltas bigint")
 
-    m = _UPDATE_HEAD.match(text)
+    m = _UPDATE_HEAD.match(masked)
     if m:
         set_text, cond = _split_where(text[m.end() :], "UPDATE")
         keys = _mor_keys(spark, m.group(1))
@@ -329,9 +337,9 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
         else:
             n = update_table(spark, m.group(1), cond or "true",
                              _assignments(set_text))
-        return spark.createDataFrame([(n,)], "updated bigint")
+        return local_rows(spark, [(n,)], "updated bigint")
 
-    m = _DELETE_HEAD.match(text)
+    m = _DELETE_HEAD.match(masked)
     if m:
         tail, cond = _split_where(text[m.end() :], "DELETE")
         if tail.strip():
@@ -341,7 +349,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
             n = _delete_mor(spark, m.group(1), cond or "true", keys)
         else:
             n = delete_from(spark, m.group(1), cond or "true")
-        return spark.createDataFrame([(n,)], "deleted bigint")
+        return local_rows(spark, [(n,)], "deleted bigint")
 
     if not re.match(r"^\s*MERGE\b", text, re.I):
         return None
@@ -512,7 +520,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
         not_matched_insert=not_matched_insert,
         not_matched_cond=insert_guard,
     )
-    return spark.createDataFrame(
-        [(stats["updated"], stats["deleted"], stats["inserted"])],
+    return local_rows(
+        spark, [(stats["updated"], stats["deleted"], stats["inserted"])],
         "updated bigint, deleted bigint, inserted bigint",
     )

@@ -14,7 +14,7 @@ from typing import Any, Callable, Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from amplab_hive_spark.catalog import load_tables
-from amplab_hive_spark.session import get_spark
+from amplab_hive_spark.session import get_spark, local_rows
 from amplab_hive_spark.sqltext import strip_leading_comments
 
 
@@ -83,7 +83,7 @@ class Engine:
 
             return run_dfs(self.spark, text[3:].strip().rstrip(";"))
         if self.macros.handle_statement(text):
-            return self.spark.range(0).select()  # empty result, DDL-style
+            return local_rows(self.spark, [], "struct<>")  # empty result, DDL-style
         expanded = self.macros.expand(text)
         from amplab_hive_spark.authorization import handle as _auth_handle
         from amplab_hive_spark.dml_text import handle as _dml_handle

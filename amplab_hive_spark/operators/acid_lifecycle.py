@@ -35,24 +35,11 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from amplab_hive_spark.registry import register
+from amplab_hive_spark.session import local_rows
 
-_SUMMARY_SCHEMA = StructType(
-    [
-        StructField("phase", StringType()),
-        StructField("l_returnflag", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("sum_qty", DoubleType()),
-    ]
-)
+_SUMMARY_SCHEMA = "phase string, l_returnflag string, n_rows bigint, sum_qty double"
 
 _ORACLE = """
 WITH base AS (
@@ -145,4 +132,4 @@ def acid_mor_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         for phase, summary in phases
         for flag, n, qty in summary
     ]
-    return spark.createDataFrame(data, _SUMMARY_SCHEMA)
+    return local_rows(spark, data, _SUMMARY_SCHEMA)

@@ -11,7 +11,12 @@ gets its own temp-view namespace, SQLConf, and macro registry
 (exactly the isolation tests/test_concurrent_engine.py pins), while
 sharing the catalog and executors. Statements route through
 ``Engine.sql``, so the macro shim and the UPDATE/DELETE/MERGE
-statement front-end (dml_text) work over the wire too.
+statement front-end (dml_text) work over the wire too. Their answers
+(SET, DML counts, COMPACT, SHOW COMPACTIONS/TRANSACTIONS/LOCKS, role
+DDL, ``dfs``) are job-free: each is a ``LocalRelation`` built on the
+driver by ``session.local_rows``, so the first-page ``take`` runs no
+Spark job, as in HiveServer2, where such an operation's row is
+already in memory.
 
 Wire protocol (one JSON object per line, UTF-8):
 

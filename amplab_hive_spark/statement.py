@@ -27,6 +27,12 @@ JSON service (service.py) and the TCLI/beeline front (tcli.py).
   opened: a cursor opened inside ``tagged`` keeps its statement's
   group for its whole life, a page pull needs no tag of its own, and
   cancelling the statement's group aborts an in-flight page.
+- **Job-free answers.** What a pre-parse shim answers (SET, UPDATE/
+  DELETE/MERGE counts, COMPACT, SHOW COMPACTIONS/TRANSACTIONS/LOCKS,
+  role DDL, ``dfs``, macros) is a ``LocalRelation`` built by
+  ``session.local_rows``, like Spark's own command results. Such a
+  frame ``isLocal()``: ``take`` answers it on the driver and the
+  cursor collects it, so serving it runs no Spark job on either front.
 """
 
 from __future__ import annotations
@@ -91,14 +97,17 @@ _END = object()
 
 
 class Cursor:
-    """Pages ``rows`` — a DataFrame (served by ``toLocalIterator``) or
-    any iterable — forward only. ``close()`` releases the iterator
-    eagerly, which closes the local-iterator socket and stops the JVM
-    side serving the result."""
+    """Pages ``rows`` — a DataFrame or any iterable — forward only. A
+    local DataFrame (a shim answer or a command result, already on the
+    driver) is collected, which runs no job; any other is served by
+    ``toLocalIterator``. ``close()`` releases the iterator eagerly,
+    which closes the local-iterator socket and stops the JVM side
+    serving the result."""
 
     def __init__(self, rows: "DataFrame | Iterable"):
         if isinstance(rows, DataFrame):
-            rows = rows.toLocalIterator(prefetchPartitions=True)
+            rows = (rows.collect() if rows.isLocal()
+                    else rows.toLocalIterator(prefetchPartitions=True))
         self._it: Iterator = iter(rows)
         self._peeked = _END
 

@@ -39,24 +39,11 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from amplab_hive_spark.registry import register
+from amplab_hive_spark.session import local_rows
 
-_SUMMARY_SCHEMA = StructType(
-    [
-        StructField("phase", StringType()),
-        StructField("o_orderstatus", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("sum_price", DoubleType()),
-    ]
-)
+_SUMMARY_SCHEMA = "phase string, o_orderstatus string, n_rows bigint, sum_price double"
 
 _ORACLE = """
 WITH init AS (
@@ -181,4 +168,4 @@ def streaming_upsert_cdc_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
         for phase, summary in phases
         for st, n, price in summary
     ]
-    return spark.createDataFrame(data, _SUMMARY_SCHEMA)
+    return local_rows(spark, data, _SUMMARY_SCHEMA)

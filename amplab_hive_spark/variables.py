@@ -46,6 +46,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_rows
+
 # SystemVariables.java:30 — no '}', '$' or space inside the braces.
 VARPAT = re.compile(r"\$\{[^}$ ]+\}")
 
@@ -153,8 +155,8 @@ class VariableRegistry:
             )
             if not extras:
                 return base
-            return base.union(
-                spark.createDataFrame(extras, base.schema))
+            # the dump is a command result, already on the driver
+            return local_rows(spark, base.collect() + extras, base.schema)
         m = _SET_STMT.match(stripped)
         if not m:
             return None
@@ -180,7 +182,7 @@ class VariableRegistry:
             # (SetProcessor.getVariable)
             val = self._get_substitute(spark, name)
             shown = val if val is not None else "<undefined>"
-            return _kv_result(spark, name, shown)
+            return local_rows(spark, [(name, shown)], "key string, value string")
         value = value.strip()
         if name.startswith(ENV_PREFIX):
             # SetProcessor.java:122: env:* variables can not be set
@@ -207,12 +209,7 @@ class VariableRegistry:
 
             guard_prefixed_conf_set(spark, key)
             spark.conf.set(key, value)
-        return _kv_result(spark, name, value)
-
-
-def _kv_result(spark: SparkSession, key: str, value: str) -> DataFrame:
-    """Spark's native SET result schema: (key string, value string)."""
-    return spark.createDataFrame([(key, value)], "key string, value string")
+        return local_rows(spark, [(name, value)], "key string, value string")
 
 
 def parse_kv_flags(pairs: list[str], flag: str) -> dict[str, str]:

@@ -34,6 +34,7 @@ _FAST_MODULES = {
     "test_testdata_contract.py",
     "test_statement.py",       # server-front session/cancel/cursor + MOR UPDATE type
     "test_sqltext.py",         # the one SQL lexer the pre-parse shims share
+    "test_local_results.py",   # job-free shim answers + MOR/MERGE smoke
 }
 
 

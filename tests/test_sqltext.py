@@ -120,3 +120,37 @@ def test_merge_inserts_double_quoted_literal_verbatim(eng, spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS src")
         spark.sql("DROP TABLE IF EXISTS dst")
+
+
+def test_comment_between_head_keywords(eng, spark, tmp_path):
+    """UPDATE/DELETE/COMPACT heads are matched on the mask, so a comment
+    between their keywords is whitespace, as it is to Spark's lexer."""
+    assert eng.sql(
+        "UPDATE sqltext_t /* c */ SET c = 'z' WHERE k = 1"
+    ).collect()[0].updated == 1
+    assert eng.sql(
+        "DELETE /* c */ FROM sqltext_t -- c\n WHERE k = 3"
+    ).collect()[0].deleted == 1
+    assert sorted(tuple(r) for r in spark.table("sqltext_t").collect()) == [
+        (1, "z"), (2, "b"),
+    ]
+    spark.sql("DROP TABLE IF EXISTS sqltext_mor")
+    try:
+        spark.sql(
+            f"CREATE TABLE sqltext_mor (k INT) USING parquet"
+            f" LOCATION '{tmp_path}/sqltext_mor'"
+            f" TBLPROPERTIES ('transactional'='true', 'merge_keys'='k')"
+        )
+        spark.sql("INSERT INTO sqltext_mor VALUES (1), (2)")
+        eng.sql("DELETE FROM sqltext_mor WHERE k = 1")
+        eng.sql("DELETE FROM sqltext_mor WHERE k = 2")
+        assert eng.sql(
+            "ALTER TABLE sqltext_mor /* c */ COMPACT 'minor'"
+        ).collect()[0].compacted_deltas == 2
+        assert eng.sql(
+            "ALTER TABLE sqltext_mor -- c\n COMPACT /* c */ 'major' -- done"
+        ).collect()[0].compacted_deltas == 1
+        with pytest.raises(ValueError, match="'major' or 'minor'"):
+            eng.sql("ALTER TABLE sqltext_mor COMPACT 'full'")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sqltext_mor")
