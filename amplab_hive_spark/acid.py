@@ -145,9 +145,9 @@ def _qualify(spark: SparkSession, name: str) -> str:
     """Database-qualified form of ``name``. Every INTERNAL read of the
     base table (metadata or rows) goes through this: a multi-part
     identifier can never resolve to a session temp view, so the
-    merged-read shadow views this module publishes over MOR table
-    names (mor_statement_scope / publish_mor_views) cannot intercept
-    the module's own base access — read_mor building its plan through
+    per-statement merged-read shadow views this module installs over
+    MOR table names (mor_statement_scope) cannot intercept the
+    module's own base access — read_mor building its plan through
     its own shadow would recurse."""
     if "." in name:
         return name
@@ -604,7 +604,6 @@ def update_mor(
     _register_pinned(name)
     _maybe_autocompact(spark, name, delta_dir, compact_after, "UPDATE",
                        compact_mode)
-    _sync_published(spark, name)
     return int(matched)
 
 
@@ -767,7 +766,6 @@ def _commit_key_deletes(
     _register_pinned(name)
     _maybe_autocompact(spark, name, delta_dir, compact_after, "DELETE",
                        compact_mode)
-    _sync_published(spark, name)
     return int(n)
 
 
@@ -1028,9 +1026,7 @@ def compact_mor(spark: SparkSession, name: str, mode: str = "major") -> int:
             _purge_delta_dir(delta_dir, manifest=pinned)
         return 0
     if mode == "minor":
-        n = _compact_minor(spark, name, delta_dir, pinned)
-        _sync_published(spark, name)
-        return n
+        return _compact_minor(spark, name, delta_dir, pinned)
     n_files = len(entries)
     folded = read_mor(spark, name).localCheckpoint(eager=True)
     # qualified target: the base rewrite must reach the CATALOG table
@@ -1054,7 +1050,6 @@ def compact_mor(spark: SparkSession, name: str, mode: str = "major") -> int:
     _purge_delta_dir(delta_dir, manifest=pinned)
     # Spark caches file listings; direct fs deletes need a refresh
     spark.sql(f"REFRESH TABLE {qname}")
-    _sync_published(spark, name)
     return n_files
 
 
@@ -1211,8 +1206,6 @@ def unpin_mor_keys(spark: SparkSession, name: str) -> None:
     _purge_delta_dir(delta_dir)
     bare = name.split(".")[-1].lower()
     _PINNED_NAMES.discard(bare)
-    if bare in _PUBLISHED:
-        unpublish_mor_views(spark, [bare])
 
 
 def _purge_delta_dir(delta_dir: str, manifest: list[str] | None = None) -> None:
@@ -1247,11 +1240,10 @@ def _purge_delta_dir(delta_dir: str, manifest: list[str] | None = None) -> None:
 #   soon as the statement is analyzed. Spark analyzes eagerly at
 #   ``spark.sql()`` — the shadow's plan is inlined into the returned
 #   DataFrame, so dropping it immediately is safe.
-# - ``publish_mor_views``: the PERSISTENT form of the same shadow, for
-#   sessions whose statements bypass the Engine (the Thrift/JDBC surface
-#   runs raw ``spark.sql``): published views are kept current by the
-#   write verbs (_sync_published) so a beeline SELECT sees committed
-#   row-level changes.
+#
+# Every SQL surface (CLI, JSON service, TCLI/beeline front) runs its
+# statements through Engine.sql, so this per-statement scope is the one
+# merged-read path.
 #
 # Documented divergences from the reference's reader (each pinned by a
 # test in tests/test_acid_mor.py):
@@ -1275,30 +1267,6 @@ def _purge_delta_dir(delta_dir: str, manifest: list[str] | None = None) -> None:
 # references no MOR table at all.
 _PINNED_NAMES: set[str] = set()
 
-# bare lowercase name -> the qualified name it was published UNDER
-# (persistent merged-view shadow). The VALUE matters to the
-# authorization gate: a published view shadows the BARE name, but its
-# backing catalog table may live outside the current database — the
-# gate resolves SELECT checks through this mapping (review r11).
-_PUBLISHED: dict[str, str] = {}
-
-
-def published_backing(bare: str) -> tuple[str | None, str] | None:
-    """The (db, tbl) the published view over ``bare`` was created for,
-    parsed from the _PUBLISHED mapping value — the ONE parser both the
-    authorization gate's fast path and its definitive resolver share,
-    so they cannot drift (review r11 pass 3). Returns None when the
-    name is not published; (None, tbl) for a legacy bare value (the
-    caller must then resolve definitively rather than guess the
-    current database)."""
-    pub = _PUBLISHED.get(bare)
-    if pub is None:
-        return None
-    parts = [p.strip().strip("`") for p in pub.split(".")]
-    if len(parts) > 1:
-        return parts[-2].lower(), parts[-1].lower()
-    return None, parts[-1].lower()
-
 _VIEW_DDL_ROOTS = {"CreateView", "CreateViewCommand", "AlterViewAs"}
 _REL_RE = re.compile(r"'UnresolvedRelation \[([^\]]+)\]")
 _INSERT_TARGET_RE = re.compile(
@@ -1312,14 +1280,14 @@ def _register_pinned(name: str) -> None:
 
 
 def _known_mor_names(spark: SparkSession) -> set[str]:
-    """Names that COULD need merged-read routing: pinned this process,
-    published, or holding a manifest under the session warehouse (pins
+    """Names that COULD need merged-read routing: pinned this process
+    or holding a manifest under the session warehouse (pins
     from earlier sessions; managed-table directory names are the
     lowercase table names). External tables pinned by an EARLIER
     process are the one hole — their manifests live outside the
     warehouse — accepted: the engine is single-process and external
     MOR tables re-register on first verb."""
-    names = set(_PINNED_NAMES) | set(_PUBLISHED)
+    names = set(_PINNED_NAMES)
     try:
         wh = _local_path(spark.conf.get("spark.sql.warehouse.dir"))
         for d in os.listdir(wh):
@@ -1351,15 +1319,11 @@ def resolve_read(spark: SparkSession, name: str) -> DataFrame:
 
 def _statement_shadow_plan(
     spark: SparkSession, text: str, parsed: tuple[str, str] | None = None
-) -> tuple[list[str], list[str]]:
-    """(shadows_created, published_unshadowed) for one SQL statement.
-
-    Shadows: single-part references to MOR tables with live deltas,
-    excluding insert targets, names already holding a temp view, and
-    view-DDL statements (see module comment). Published unshadows:
-    insert targets whose bare name currently carries a PUBLISHED
-    merged view — the write must reach the catalog table, so the
-    view is dropped for the statement and resynced after.
+) -> list[str]:
+    """The shadow views created for one SQL statement: single-part
+    references to MOR tables with live deltas, excluding insert
+    targets, names already holding a temp view, and view-DDL
+    statements (see module comment).
 
     ``parsed``: an already-available ``(root, tree)`` from
     authorization.parse_tree — Engine.sql reuses the enforcement
@@ -1368,15 +1332,15 @@ def _statement_shadow_plan(
     screen, so the common no-MOR statement never pays the JVM trip)."""
     known = _known_mor_names(spark)
     if not known:
-        return [], []
+        return []
     # cheap text screen before the JVM parse
     if not (known & set(_IDENT_RE.findall(text.lower()))):
-        return [], []
+        return []
     if parsed is None:
         try:
             jp = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
         except Exception:
-            return [], []  # let spark.sql raise the real parse error
+            return []  # let spark.sql raise the real parse error
         parsed = jp.getClass().getSimpleName(), jp.toString()
     root, tree = parsed
     targets = {
@@ -1385,7 +1349,6 @@ def _statement_shadow_plan(
         if "," not in t
     }
     created: list[str] = []
-    unshadowed: list[str] = []
     if root not in _VIEW_DDL_ROOTS:
         seen: set[str] = set()
         for r in _REL_RE.findall(tree):
@@ -1396,7 +1359,7 @@ def _statement_shadow_plan(
                 continue
             seen.add(bare)
             if _temp_view_exists(spark, bare):
-                continue  # user's own view (or a published shadow) wins
+                continue  # the user's own view wins
             try:
                 if mor_keys(spark, bare) is None:
                     continue
@@ -1406,18 +1369,13 @@ def _statement_shadow_plan(
             except Exception:
                 continue
             created.append(bare)
-    for t in targets:
-        if t in _PUBLISHED and _temp_view_exists(spark, t):
-            spark.catalog.dropTempView(t)
-            unshadowed.append(t)
-    return created, unshadowed
+    return created
 
 
 class mor_statement_scope:
     """Context manager installing the per-statement merged-read
     shadows around one ``spark.sql`` call (Engine.sql uses this).
-    Exit drops the ephemeral shadows and restores any published view
-    it had to lift for an insert target."""
+    Exit drops the ephemeral shadows."""
 
     def __init__(
         self, spark: SparkSession, text: str,
@@ -1428,7 +1386,7 @@ class mor_statement_scope:
         self.parsed = parsed
 
     def __enter__(self):
-        self.created, self.unshadowed = _statement_shadow_plan(
+        self.created = _statement_shadow_plan(
             self.spark, self.text, parsed=self.parsed
         )
         return self
@@ -1439,184 +1397,4 @@ class mor_statement_scope:
                 self.spark.catalog.dropTempView(bare)
             except Exception:
                 pass
-        for bare in self.unshadowed:
-            try:
-                _sync_published(self.spark, bare)
-            except Exception:
-                pass
         return False
-
-
-def publish_mor_views(spark: SparkSession, names: list[str]) -> list[str]:
-    """Register a PERSISTENT merged-read temp view over each named
-    merge-on-read table, for sessions whose statements bypass the
-    Engine — the Thrift/JDBC surface speaks raw ``spark.sql``, where
-    the per-statement scope never runs. Once published, a beeline
-    ``SELECT * FROM t`` sees committed UPDATE/DELETE results, and the
-    write verbs keep the view current (_sync_published after every
-    delta commit and compaction).
-
-    Caveats (the price of a name-shadowing view, each pinned by a
-    test): while published, bare-name metadata/write statements hit
-    the VIEW — ``DESCRIBE t`` describes the merged schema,
-    ``INSERT INTO t`` through raw spark.sql fails (qualify as
-    ``db.t``, or run inserts through Engine.sql, whose statement
-    scope lifts the shadow around the insert) — and ``db.t`` reads
-    stay raw. Returns the names actually published. Raises on a
-    non-MOR name: publishing a no-op shadow would silently lie."""
-    # validate EVERY name before mutating anything: a mid-list error
-    # must not leave earlier names silently published while the caller
-    # sees only the exception (review r11 — all-or-nothing)
-    plan: list[tuple[str, str, str]] = []
-    for name in names:
-        bare = name.split(".")[-1].lower()
-        if mor_keys(spark, name) is None:
-            raise ValueError(
-                f"{name} is not merge-on-read (no pinned manifest or "
-                f"transactional tblproperties); nothing to publish"
-            )
-        if bare not in _PUBLISHED and _temp_view_exists(spark, bare):
-            raise ValueError(
-                f"a temp view already holds the name {bare!r}; refusing "
-                f"to clobber it with a published merged view"
-            )
-        # the stored value is ALWAYS db-qualified: a bare name is
-        # resolved in the publish-time current database, and every
-        # later consumer (write resync, the authz gate) goes through
-        # the mapping rather than re-resolving in whatever database is
-        # current THEN (review r11 pass 2 — a bare value re-resolved
-        # at check/sync time could land on a same-named foreign table)
-        qual = _qualify(spark, name)
-        # a prior publish can come from an EARLIER call (_PUBLISHED) or
-        # from an earlier entry of THIS call's plan (review r12: two
-        # same-bare names in one list silently re-pointed the view —
-        # validation never saw the first, the mapping is only mutated
-        # after validation)
-        prior = _PUBLISHED.get(bare)
-        for _, pbare, pqual in plan:
-            if pbare == bare:
-                prior = pqual
-                break
-        if prior is not None and prior.lower() != qual.lower():
-            # an explicit re-publish must not silently RE-POINT the
-            # bare name at a different backing table (review r11
-            # pass 3 — the same hazard the mapping closes for
-            # implicit consumers); unpublish first to move it
-            raise ValueError(
-                f"{bare!r} is already published for {prior}; refusing "
-                f"to re-point it at {qual} — unpublish_mor_views first"
-            )
-        plan.append((name, bare, qual))
-    # mutate under a rollback guard: _sync_published can still throw
-    # AFTER validation (corrupt delta, schema drift discovered only at
-    # view-build time — VERDICT r11 finding 1), and that must not
-    # leave earlier names published nor the failing name mapped with
-    # no live view behind it. Entries this call ADDED are unwound and
-    # their views dropped; a pre-existing idempotent re-publish keeps
-    # its prior mapping (its qual is unchanged by validation).
-    out: list[str] = []
-    added: list[str] = []
-    try:
-        for name, bare, qual in plan:
-            if bare not in _PUBLISHED:
-                added.append(bare)
-            _PUBLISHED[bare] = qual
-            _sync_published(spark, name)
-            out.append(bare)
-    except Exception:
-        for bare in added:
-            _PUBLISHED.pop(bare, None)
-            try:
-                spark.catalog.dropTempView(bare)
-            except Exception:  # noqa: BLE001 — view never built
-                pass
-        raise
-    return out
-
-
-def auto_publish_mor_views(spark: SparkSession) -> list[str]:
-    """Publish the merged view for EVERY currently-known merge-on-read
-    table — the serving-session bootstrap (thrift.start_thrift_server
-    calls this so a JDBC reader sees merged rows by default, the
-    reference reader's rule, without naming tables one by one).
-    Unlike publish_mor_views this skips rather than raises: a name
-    that stopped being MOR, resolves nowhere, or is already held by a
-    USER temp view is left alone — an auto pass must not turn a
-    server start into an error over an unrelated name. Returns the
-    names actually published (idempotent)."""
-    out = []
-    for bare in sorted(_known_mor_names(spark)):
-        try:
-            if mor_keys(spark, bare) is None:
-                continue
-        except Exception:  # noqa: BLE001 — unresolvable/non-local
-            continue
-        newly = bare not in _PUBLISHED
-        if newly and _temp_view_exists(spark, bare):
-            continue  # a user temp view owns the name; leave it
-        try:
-            # Corrupt-delta probe (r15): delta reads now carry an
-            # EXPLICIT schema (_delta_read), so read_mor no longer
-            # touches file footers at plan time and a corrupt delta
-            # would surface at first QUERY, not here. An auto pass
-            # must still skip such a table (r10 p3 contract), so force
-            # a footer read — of EVERY delta file (mergeSchema; plain
-            # inference reads one footer, so a corrupt later delta
-            # passed) — once per server start, never on the hot
-            # write/read path.
-            probe_paths = [p for _, _, p in
-                           _scan_deltas(_delta_path(spark, bare))]
-            if probe_paths:
-                spark.read.option("mergeSchema", "true").parquet(*probe_paths).schema
-            # same qualified-value rule as publish_mor_views: the bare
-            # name just resolved (mor_keys above) in the CURRENT db
-            _PUBLISHED.setdefault(bare, _qualify(spark, bare))
-            _sync_published(spark, bare)
-        except Exception:  # noqa: BLE001
-            # one bad table (corrupt delta, drifted schema) must not
-            # abort the server start (r10 p3) — but only a NEWLY-added
-            # name is rolled back: a previously-published name stays
-            # registered so write-sync keeps covering it after one
-            # transient _sync_published error (ADVICE r10)
-            if newly:
-                _PUBLISHED.pop(bare, None)
-            continue
-        out.append(bare)
-    return out
-
-
-def unpublish_mor_views(spark: SparkSession, names: list[str]) -> None:
-    for name in names:
-        bare = name.split(".")[-1].lower()
-        _PUBLISHED.pop(bare, None)
-        try:
-            spark.catalog.dropTempView(bare)
-        except Exception:
-            pass
-
-
-def _sync_published(spark: SparkSession, name: str) -> None:
-    """Re-register (or drop) the published merged view after a write.
-    Live deltas -> fresh read_mor plan (the previous view's plan
-    enumerated the OLD delta files); no deltas -> drop the view
-    (merged == base; the name stays in _PUBLISHED so the next delta
-    re-publishes). The view is always rebuilt against the QUALIFIED
-    name it was published for (the _PUBLISHED mapping value) — a
-    bare-name caller running in another database must neither lose
-    the view nor re-point it at a same-named local table (review r11
-    pass 2)."""
-    bare = name.split(".")[-1].lower()
-    target = _PUBLISHED.get(bare)
-    if target is None:
-        return
-    try:
-        live = bool(_scan_deltas(_delta_path(spark, target)))
-    except Exception:
-        live = False
-    if live:
-        read_mor(spark, target).createOrReplaceTempView(bare)
-    else:
-        try:
-            spark.catalog.dropTempView(bare)
-        except Exception:
-            pass

@@ -956,12 +956,6 @@ def _held_privs(
 _EXEMPT = object()  # _candidate_enforceable: provably exempt, skip
 
 
-def _temp_view_holds(spark: SparkSession, bare: str) -> bool:
-    from amplab_hive_spark.acid import _temp_view_exists
-
-    return _temp_view_exists(spark, bare)
-
-
 def _candidate_enforceable(
     spark: SparkSession, name: str, for_write: bool = False
 ):
@@ -977,29 +971,15 @@ def _candidate_enforceable(
     slow path resolves), while DENYING always re-confirms against the
     catalog so an absent table still falls through to its own
     resolution error. Returns (db, tbl), _EXEMPT (provably exempt:
-    a session-private unpublished temp-view read), or None (unknown
-    shape — caller must resolve definitively)."""
+    a session-private temp-view read), or None (unknown shape — caller
+    must resolve definitively)."""
     parts = [p.strip("`") for p in name.split("`.`")]
     if len(parts) == 1:
         bare = parts[0].lower()
-        if _temp_view_holds(spark, bare):
-            if not for_write:
-                from amplab_hive_spark.acid import published_backing
+        from amplab_hive_spark.acid import _temp_view_exists
 
-                backing = published_backing(bare)
-                if backing is None:
-                    return _EXEMPT
-                # published merged view: the mapping value is the
-                # db-QUALIFIED name it was published for (acid stores
-                # it qualified since review r11 pass 2), which IS what
-                # the definitive path resolves — a sound metastore-free
-                # candidate. A legacy bare value (db None) forces the
-                # definitive resolver instead of guessing the current
-                # database.
-                db, tbl = backing
-                if db is not None:
-                    return db, tbl
-                return None
+        if not for_write and _temp_view_exists(spark, bare):
+            return _EXEMPT
         db = (
             spark._jsparkSession.sessionState().catalog()
             .getCurrentDatabase().lower()
@@ -1019,19 +999,14 @@ def _resolve_enforceable(spark: SparkSession, name: str, for_write: bool = False
     the statement's own resolution error rather than a misleading
     authz denial).
 
-    Temp views are exempt ONLY when they are genuinely session-private
-    reads. Two shadowing holes closed here (ADVICE/VERDICT r10):
-    (a) a WRITE pierces any shadowing temp view to the catalog table
-    of the same bare name, because the engine's write verbs (dml_text
-    UPDATE/DELETE/MERGE resolve the CATALOG object by name; the
-    reference's UpdateDeleteSemanticAnalyzer likewise binds the
-    metastore table) mutate the real table regardless of the shadow;
-    (b) an engine-PUBLISHED merged MOR view (acid.publish_mor_views)
-    sits on the bare catalog name of a real transactional table, so a
-    SELECT through it reads that table and requires SELECT on it. A
-    user temp view with no published backing stays exempt for reads —
-    its definition was privilege-checked at CREATE time
-    (test_enforcement_temp_view_laundering_blocked)."""
+    A temp-view READ is exempt: the view is session-private and its
+    definition was privilege-checked at CREATE time
+    (test_enforcement_temp_view_laundering_blocked). A WRITE pierces
+    any shadowing temp view to the catalog table of the same bare
+    name, because the engine's write verbs (dml_text UPDATE/DELETE/
+    MERGE resolve the CATALOG object by name; the reference's
+    UpdateDeleteSemanticAnalyzer likewise binds the metastore table)
+    mutate the real table regardless of the shadow (ADVICE r10)."""
     try:
         t = spark.catalog.getTable(name)
     except Exception:  # noqa: BLE001 — not a catalog object
@@ -1039,34 +1014,13 @@ def _resolve_enforceable(spark: SparkSession, name: str, for_write: bool = False
     if not t.isTemporary:
         db = (t.database or spark.catalog.currentDatabase()).lower()
         return db, t.name.lower()
-    # a temp view holds the name; only a BARE single-part name can
-    # shadow a catalog table (_quoted_multipart joins parts with `.`,
-    # so multi-part lookups contain the literal backtick-dot-backtick)
-    if "`.`" in name:
+    # a temp view holds the name: a read of it is exempt, and only a
+    # BARE single-part name can shadow a catalog table for a write
+    # (_quoted_multipart joins parts with `.`, so multi-part lookups
+    # contain the literal backtick-dot-backtick)
+    if not for_write or "`.`" in name:
         return None
     bare = name.strip("`").lower()
-    if not for_write:
-        from amplab_hive_spark.acid import _PUBLISHED, published_backing
-
-        backing = published_backing(bare)
-        if backing is None:
-            return None  # session-private read — checked at CREATE
-        # published merged view: resolve through the name it was
-        # published UNDER — the backing catalog table may live outside
-        # the current database (review r11). If the backing is itself
-        # unresolvable (dropped behind the view, shadowed bare name),
-        # fail CLOSED on the published name's parts rather than exempt.
-        try:
-            t2 = spark.catalog.getTable(_PUBLISHED[bare])
-            if not t2.isTemporary:
-                return (
-                    (t2.database or spark.catalog.currentDatabase()).lower(),
-                    t2.name.lower(),
-                )
-        except Exception:  # noqa: BLE001 — fall to the closed default
-            pass
-        db, tbl = backing
-        return (db or spark.catalog.currentDatabase().lower()), tbl
     # db-qualified lookup: temp-view resolution cannot intercept it
     try:
         db = spark.catalog.currentDatabase()

@@ -7,6 +7,8 @@ Usage:
     python -m amplab_hive_spark.cli -f script.sql [--sf-dir DIR]
     python -m amplab_hive_spark.cli            # REPL
     python -m amplab_hive_spark.cli --serve [--port N]   # SQL service
+    python -m amplab_hive_spark.cli --serve-tcli [--port N] [--sf-dir DIR]
+        # the HiveServer2/JDBC front: beeline -u jdbc:hive2://host:N
     python -m amplab_hive_spark.cli --connect HOST:PORT [-e SQL]
         # beeline analogue: a THIN network client (no Spark in this
         # process) against a --serve instance; -e/-f one-shots or an
@@ -279,12 +281,6 @@ def main(argv: list[str] | None = None) -> int:
              "(the beeline analogue; this process never starts Spark)",
     )
     ap.add_argument(
-        "--serve-thrift", action="store_true",
-        help="run the HiveServer2-COMPATIBLE Thrift/JDBC server "
-             "(thrift.py) until interrupted; real beeline/JDBC/ODBC "
-             "clients connect with jdbc:hive2://host:port",
-    )
-    ap.add_argument(
         "--serve-tcli", action="store_true",
         help="run the ENGINE-ROUTED TCLIService front (tcli.py) until "
              "interrupted: JDBC clients connect with the default "
@@ -302,7 +298,7 @@ def main(argv: list[str] | None = None) -> int:
     hivevars.update(parse_kv_flags(args.hivevar, "--hivevar"))
     hiveconfs = parse_kv_flags(args.hiveconf, "--hiveconf")
 
-    if args.serve or args.serve_tcli or args.serve_thrift:
+    if args.serve or args.serve_tcli:
         # hivevars are per-connection session state (each connection
         # gets its own Engine + VariableRegistry): a server-wide
         # hivevar flag would be a silent no-op, so refuse it loudly.
@@ -328,7 +324,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.serve_tcli:
         if args.e is not None or args.f is not None or args.serve \
-                or args.connect or args.serve_thrift:
+                or args.connect:
             ap.error("--serve-tcli is a standalone role")
         from amplab_hive_spark.session import get_spark
         from amplab_hive_spark.tcli import TCLIFront
@@ -347,26 +343,6 @@ def main(argv: list[str] | None = None) -> int:
             threading.Event().wait()
         except KeyboardInterrupt:
             front.stop()
-        return 0
-
-    if args.serve_thrift:
-        if args.e is not None or args.f is not None or args.serve or args.connect:
-            ap.error("--serve-thrift is a standalone role")
-        from amplab_hive_spark.catalog import tables
-        from amplab_hive_spark.session import get_spark
-        from amplab_hive_spark.thrift import start_thrift_server
-
-        spark = _apply_hiveconf(get_spark("thrift-service"))
-        tables(spark, args.sf_dir)  # single_session: views answer via JDBC
-        port = start_thrift_server(spark, port=args.port, host=args.host)
-        print(f"Thrift/JDBC server on jdbc:hive2://{args.host}:{port}",
-              flush=True)
-        try:
-            import threading
-
-            threading.Event().wait()
-        except KeyboardInterrupt:
-            pass
         return 0
 
     if args.connect:

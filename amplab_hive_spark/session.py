@@ -134,11 +134,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # -- Arrow for the few pandas-UDF paths (LLM ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # -- Thrift/JDBC entry point (thrift.py): share the engine's
-        #    session with JDBC connections so attached temp views and
-        #    macros answer over beeline. STATIC conf — must be set at
-        #    build time; inert unless start_thrift_server is called.
-        .config("spark.sql.hive.thriftServer.singleSession", "true")
         # -- quieter local runs; the driver collects results, not UI.
         .config("spark.ui.enabled", "false")
         # -- Hive-compatible non-ANSI coercions (string<->number casts,

@@ -766,51 +766,37 @@ def test_enforcement_write_pierces_temp_view_shadow(enforced, spark, tbl):
         spark.catalog.dropTempView(tbl)
 
 
-def test_enforcement_published_mor_view_requires_select(
+def test_enforcement_mor_merged_read_requires_select(
     enforced, spark, tbl, tmp_path
 ):
-    """VERDICT r10 finding #1: an engine-published merged MOR view
-    sits on the bare catalog name of a real table — SELECT through it
-    is a read of that table and requires SELECT on it."""
-    from amplab_hive_spark import acid
-
+    """A merged read of a merge-on-read table with live deltas is a read
+    of the catalog table: the gate checks SELECT on it before the
+    statement scope installs its merged-read shadow view, so the shadow
+    never turns the read into an exempt temp-view read."""
     eng, _as, _seed = enforced
-    name = "authz_mor_pub_t"
+    name = "authz_mor_read_t"
     spark.conf.set("spark.sql.authz.enabled", "false")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     spark.sql(
         f"CREATE TABLE {name} (k INT, v INT) USING parquet "
-        f"LOCATION '{tmp_path}/authz_mor_pub_t' "
+        f"LOCATION '{tmp_path}/authz_mor_read_t' "
         f"TBLPROPERTIES ('transactional'='true', 'merge_keys'='k')"
     )
     spark.sql(f"INSERT INTO {name} VALUES (1, 10), (2, 20)")
     eng.sql(f"UPDATE {name} SET v = 11 WHERE k = 1")  # live delta
-    acid.publish_mor_views(spark, [name])
     spark.conf.set("spark.sql.authz.enabled", "true")
     try:
         _as("mallory")
-        with pytest.raises(PermissionError, match=r"\[SELECT\].*authz_mor_pub_t"):
+        with pytest.raises(PermissionError, match=r"\[SELECT\].*authz_mor_read_t"):
             eng.sql(f"SELECT * FROM {name}")
         _seed(f"GRANT SELECT ON {name} TO USER mallory")
         _as("mallory")
         rows = {r.k: r.v for r in eng.sql(f"SELECT k, v FROM {name}").collect()}
-        assert rows == {1: 11, 2: 20}  # merged view, privilege held
+        assert rows == {1: 11, 2: 20}  # merged read, privilege held
     finally:
-        acid.unpublish_mor_views(spark, [name])
         spark.conf.set("spark.sql.authz.enabled", "false")
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.conf.set("spark.sql.authz.enabled", "true")
-
-
-def test_thrift_refuses_enforced_session(enforced, spark):
-    """VERDICT r10 task 1b: the reference privilege-checks its JDBC
-    path (SQLOperation.java), this engine cannot — so an
-    enforcement-enabled session refuses to serve Thrift unless the
-    caller explicitly accepts the unenforced door."""
-    from amplab_hive_spark.thrift import start_thrift_server
-
-    with pytest.raises(PermissionError, match="unenforced"):
-        start_thrift_server(spark, port=10137)
 
 
 def test_enforcement_compact_shim_gated(enforced, spark, tmp_path):
@@ -842,82 +828,6 @@ def test_enforcement_compact_shim_gated(enforced, spark, tmp_path):
         spark.conf.set("spark.sql.authz.enabled", "false")
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.conf.set("spark.sql.authz.enabled", "true")
-
-
-def test_enforcement_published_view_foreign_db_checked(
-    enforced, spark, tmp_path
-):
-    """Review r11: a merged view published under a QUALIFIED name
-    backs a table outside the current database — the SELECT check must
-    resolve through the published mapping, not guess the current db."""
-    from amplab_hive_spark import acid
-
-    eng, _as, _seed = enforced
-    spark.conf.set("spark.sql.authz.enabled", "false")
-    spark.sql("CREATE DATABASE IF NOT EXISTS authz_fdb")
-    name = "authz_fdb.fdb_secret"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} (k INT, v INT) USING parquet "
-        f"LOCATION '{tmp_path}/fdb_secret' "
-        f"TBLPROPERTIES ('transactional'='true', 'merge_keys'='k')"
-    )
-    spark.sql(f"INSERT INTO {name} VALUES (1, 10)")
-    eng.update_mor(name, "k = 1", {"v": "11"}, ["k"])  # live delta
-    acid.publish_mor_views(spark, [name])
-    spark.conf.set("spark.sql.authz.enabled", "true")
-    try:
-        _as("mallory")
-        # bare-name read through the published view: the check lands
-        # on authz_fdb.fdb_secret, never on default.fdb_secret
-        with pytest.raises(
-            PermissionError, match=r"\[SELECT\] on \[authz_fdb.fdb_secret\]"
-        ):
-            eng.sql("SELECT * FROM fdb_secret")
-        _seed("GRANT SELECT ON authz_fdb.fdb_secret TO USER mallory")
-        _as("mallory")
-        assert eng.sql("SELECT v FROM fdb_secret WHERE k = 1").first().v == 11
-    finally:
-        acid.unpublish_mor_views(spark, [name])
-        spark.conf.set("spark.sql.authz.enabled", "false")
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql("DROP DATABASE IF EXISTS authz_fdb")
-        spark.conf.set("spark.sql.authz.enabled", "true")
-
-
-def test_thrift_accessor_warns_when_enforcement_postdates_server(
-    enforced, spark, monkeypatch
-):
-    """Review r11 pass 3: the idempotent accessor warns (never raises)
-    when enforcement was enabled AFTER an unaccepted server start; an
-    explicitly-accepted posture (allow_unenforced at start or now)
-    stays silent."""
-    import warnings as _w
-
-    from amplab_hive_spark import thrift as th
-
-    monkeypatch.setattr(
-        th, "_STARTED",
-        {"port": 10991, "host": "127.0.0.1", "server": None,
-         "allow_unenforced": False},
-    )
-    with pytest.warns(RuntimeWarning, match="UNCHECKED"):
-        assert th.start_thrift_server(spark, port=10991) == 10991
-    # explicit acceptance NOW silences it
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        assert th.start_thrift_server(
-            spark, port=10991, allow_unenforced=True
-        ) == 10991
-    # ...and so does acceptance recorded at START time
-    monkeypatch.setattr(
-        th, "_STARTED",
-        {"port": 10991, "host": "127.0.0.1", "server": None,
-         "allow_unenforced": True},
-    )
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        assert th.start_thrift_server(spark, port=10991) == 10991
 
 
 # -- round 12: programmatic Engine write verbs gated (VERDICT r11

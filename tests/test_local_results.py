@@ -7,7 +7,8 @@ a ``LocalTableScan``, and taking it runs no Spark job.
 
 The module also carries the default-tier merge-on-read smoke through
 ``Engine.sql`` (UPDATE, DELETE, COMPACT 'minor', COMPACT 'major', each
-read back) and a MERGE on a copy-on-write table."""
+read back) and a MERGE on a copy-on-write table, including a widening
+assignment that must keep its column's type."""
 
 import datetime
 import os
@@ -228,23 +229,40 @@ def test_mor_lifecycle_smoke(spark, eng):
     assert _read(engine, "lr_mor") == after_dml
 
 
+_COW_MERGES = [
+    # (target columns, target rows, source (schema, rows), WHEN clauses,
+    #  answer row, rows read back)
+    ("k INT, c STRING", "(1,'a'), (2,'b')", ("k int, c string", [(2, "B"), (9, "z")]),
+     "WHEN MATCHED THEN UPDATE SET c = s.c "
+     "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.c)",
+     (1, 0, 1), [(1, "a"), (2, "B"), (9, "z")]),
+    # a widening assignment keeps the INT column INT and writes what
+    # UPDATE ... SET c = c * 1.15 writes: CAST(11.5 AS INT) = 11
+    ("k INT, c INT", "(1, 10), (2, 20)", ("k int", [(1,)]),
+     "WHEN MATCHED THEN UPDATE SET c = c * 1.15",
+     (1, 0, 0), [(1, 11), (2, 20)]),
+]
+
+
 def test_cow_merge_answer_is_local(spark, eng):
-    engine, _ = eng
-    spark.createDataFrame([(2, "B"), (9, "z")], "k int, c string") \
-        .createOrReplaceTempView("lr_src")
-    try:
-        _assert_local(
-            spark,
-            engine.sql(
-                "MERGE INTO lr_cow t USING lr_src s ON t.k = s.k "
-                "WHEN MATCHED THEN UPDATE SET c = s.c "
-                "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.c)"
-            ),
-            "updated bigint, deleted bigint, inserted bigint", [(1, 0, 1)],
-        )
-    finally:
-        spark.catalog.dropTempView("lr_src")
-    assert _read(engine, "lr_cow") == [(1, "a"), (2, "B"), (9, "z")]
+    engine, loc = eng
+    for columns, values, (schema, rows), clauses, answer, want in _COW_MERGES:
+        spark.sql("DROP TABLE IF EXISTS lr_cow_merge")
+        spark.sql(f"CREATE TABLE lr_cow_merge ({columns}) USING parquet "
+                  f"LOCATION '{loc}/lr_cow_merge_{uuid.uuid4().hex[:8]}'")
+        spark.sql(f"INSERT INTO lr_cow_merge VALUES {values}")
+        spark.createDataFrame(rows, schema).createOrReplaceTempView("lr_src")
+        try:
+            _assert_local(
+                spark,
+                engine.sql(f"MERGE INTO lr_cow_merge t USING lr_src s "
+                           f"ON t.k = s.k {clauses}"),
+                "updated bigint, deleted bigint, inserted bigint", [answer],
+            )
+            assert _read(engine, "lr_cow_merge") == want
+        finally:
+            spark.catalog.dropTempView("lr_src")
+            spark.sql("DROP TABLE IF EXISTS lr_cow_merge")
 
 
 _SHIM_MODULES = (

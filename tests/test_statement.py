@@ -2,9 +2,10 @@
 per-connection session, one job group per execution, one result
 cursor. The session and cancel cases run on the JSON service
 (service.py) and the TCLIService front (tcli.py) alike, so a rule
-that holds on one front and not the other fails here. The last test
-pins the UPDATE projection both write paths share: the assigned value
-keeps its column's type.
+that holds on one front and not the other fails here. The rowset
+tests pin the TCLI front's result-page bytes. The last test pins the
+UPDATE projection both write paths share: the assigned value keeps its
+column's type.
 
 The cancel tests use a wide result whose partitions are slow to
 compute: one row per partition, each row sleeping in the JVM
@@ -13,13 +14,22 @@ page runs one short Spark job per row and a page of 60 rows takes
 many seconds unless it is cancelled."""
 
 import os
+import socket
 import threading
 import time
+from decimal import Decimal
 
 from pyspark.sql.types import IntegerType
 
 from amplab_hive_spark.service import SqlClient, SqlService
-from amplab_hive_spark.tcli import T_I32, T_I64, T_STRUCT, TCLIFront
+from amplab_hive_spark.tcli import (
+    T_I32,
+    T_I64,
+    T_STRUCT,
+    TCLIFront,
+    _Reader,
+    _Writer,
+)
 from tests.test_tcli_front import _Client, _handle_fields, _op_fields
 
 _SLOW_WIDE = (
@@ -159,6 +169,86 @@ def test_tcli_fetch_reports_has_more_exactly(spark):
                           [(1, T_STRUCT, _handle_fields(sess))])[1][1] == 0
         finally:
             c.close()
+
+
+# one TCLI result page covering every wire kind (bool, byte, i16, i32,
+# i64, double, string, and a decimal rendered as a string), a NULL row,
+# a non-ASCII string and an empty string
+_ROWSET_COLUMNS = [
+    ("b", "boolean"), ("t", "tinyint"), ("s", "smallint"), ("i", "int"),
+    ("l", "bigint"), ("f", "float"), ("d", "double"), ("s2", "string"),
+    ("m", "decimal(10,2)"),
+]
+_ROWSET_ROWS = [
+    (True, -1, 300, -70000, 2 ** 40, 1.5, -2.25, "h\u00e9llo \u2713",
+     Decimal("1.50")),
+    (None,) * 9,
+    (False, 127, -32768, 2 ** 31 - 1, -2 ** 63, 0.0, 1e300, "",
+     Decimal("-0.01")),
+]
+_ROWSET_HEX = (
+    "0a000100000000000000000f00020c000000000f00030c000000090c00010f00"
+    "0102000000030100000b0002000000010200000c00020f00010300000003ff00"
+    "7f0b0002000000010200000c00030f00010600000003012c000080000b000200"
+    "0000010200000c00040f00010800000003fffeee90000000007fffffff0b0002"
+    "000000010200000c00050f00010a000000030000010000000000000000000000"
+    "000080000000000000000b0002000000010200000c00060f000104000000033f"
+    "f8000000000000000000000000000000000000000000000b0002000000010200"
+    "000c00060f00010400000003c00200000000000000000000000000007e37e43c"
+    "8800759c0b0002000000010200000c00070f00010b000000030000000a68c3a9"
+    "6c6c6f20e29c9300000000000000000b0002000000010200000c00070f00010b"
+    "0000000300000004312e353000000000000000052d302e30310b000200000001"
+    "02000000"
+)
+# the same columns with no rows: every column list is empty
+_EMPTY_ROWSET_HEX = (
+    "0a000100000000000000000f00020c000000000f00030c000000090c00010f00"
+    "0102000000000b0002000000010000000c00020f000103000000000b00020000"
+    "00010000000c00030f000106000000000b0002000000010000000c00040f0001"
+    "08000000000b0002000000010000000c00050f00010a000000000b0002000000"
+    "010000000c00060f000104000000000b0002000000010000000c00060f000104"
+    "000000000b0002000000010000000c00070f00010b000000000b000200000001"
+    "0000000c00070f00010b000000000b00020000000100000000"
+)
+
+
+def _encode(fields) -> bytes:
+    w = _Writer()
+    w.fields(fields)
+    return w.bytes()
+
+
+def test_tcli_rowset_wire_bytes_are_pinned():
+    """The TRowSet bytes a FetchResults page carries, byte for byte:
+    column lists, null bitmaps, the NULL row's defaults, UTF-8 string
+    lengths, and empty lists."""
+    assert _encode(TCLIFront._rowset(_ROWSET_COLUMNS, _ROWSET_ROWS)).hex() \
+        == _ROWSET_HEX
+    assert _encode(TCLIFront._rowset(_ROWSET_COLUMNS, [])).hex() \
+        == _EMPTY_ROWSET_HEX
+
+
+def test_tcli_rowset_round_trips_through_the_reader():
+    """What ``_Writer`` encodes, ``_Reader`` decodes back to the same
+    column values and null bitmaps over a real socket."""
+    a, b = socket.socketpair()
+    try:
+        a.sendall(_encode(TCLIFront._rowset(_ROWSET_COLUMNS, _ROWSET_ROWS)))
+        got = _Reader(b).struct()
+    finally:
+        a.close()
+        b.close()
+    assert got[1] == 0 and got[2] == []
+    columns = [next(iter(col.values())) for col in got[3]]
+    values = [col[1] for col in columns]
+    assert [col[2] for col in columns] == [bytes([0b010])] * 9
+    assert values[:7] == [
+        [True, False, False], [-1, 0, 127], [300, 0, -32768],
+        [-70000, 0, 2 ** 31 - 1], [2 ** 40, 0, -2 ** 63],
+        [1.5, 0.0, 0.0], [-2.25, 0.0, 1e300],
+    ]
+    assert values[7] == ["h\u00e9llo \u2713".encode(), b"", b""]
+    assert values[8] == [b"1.50", b"", b"-0.01"]
 
 
 def test_update_widening_expression_keeps_column_type(spark, tmp_path):

@@ -123,7 +123,7 @@ def test_select_roundtrip_types_and_nulls(spark, front):
 
 
 def test_engine_dialect_over_the_wire(spark, front, tmp_path):
-    """The point of the front: statements the JVM Thrift server cannot
+    """The point of the front: engine statements Spark SQL alone cannot
     run (macros, MOR UPDATE) work over TCLIService because they go
     through Engine.sql."""
     from amplab_hive_spark import acid
@@ -148,7 +148,7 @@ def test_engine_dialect_over_the_wire(spark, front, tmp_path):
             (1, T_STRUCT, _op_fields(resp[2])), (2, T_I32, 0), (3, T_I64, 10),
         ])
         assert fr[3][3][0][4][1] == [42]
-        # MOR UPDATE statement form — the JVM server has no such verb
+        # MOR UPDATE statement form (dml_text), not Spark SQL
         assert c.execute(sess, f"UPDATE {name} SET v = v + 5 WHERE k = 1")[1][1] == 0
         resp = c.execute(sess, f"SELECT v FROM {name} WHERE k = 1")
         fr = c.call("FetchResults", [
@@ -163,9 +163,8 @@ def test_engine_dialect_over_the_wire(spark, front, tmp_path):
 
 
 def test_enforcement_applies_per_connection(spark, front):
-    """Unlike the JVM server (which refuses to serve under
-    enforcement), the front ENFORCES: the OpenSession username is the
-    principal, statements pass Engine.sql's gate."""
+    """The front ENFORCES: the OpenSession username is the principal,
+    statements pass Engine.sql's gate."""
     from amplab_hive_spark import authorization as az
     from amplab_hive_spark.engine import Engine
 
@@ -230,6 +229,63 @@ def test_fetch_paging_and_session_close(spark, front):
         c.close()
 
 
+def test_sf_dir_attaches_testdata_per_connection(spark, sf_dir):
+    """``cli --serve-tcli --sf-dir`` relies on this: every connection's
+    session re-attaches the testdata temp views, so a plain region
+    query answers all 5 rows, paged over several FetchResults calls."""
+    c = None
+    with TCLIFront(spark, sf_dir=sf_dir) as front:
+        c = _Client(front.port)
+        try:
+            sess = c.open_session()
+            resp = c.execute(
+                sess,
+                "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
+            )
+            assert resp[1][1] == 0, resp
+            keys, names, pages = [], [], 0
+            while True:
+                fr = c.call("FetchResults", [
+                    (1, T_STRUCT, _op_fields(resp[2])), (2, T_I32, 0),
+                    (3, T_I64, 2),
+                ])
+                key_col, name_col = fr[3][3]
+                keys.extend(next(iter(key_col.values()))[1])
+                names.extend(name_col[7][1])
+                pages += 1
+                if not fr[2]:
+                    break
+        finally:
+            c.close()
+    assert keys == [0, 1, 2, 3, 4]
+    assert names == [b"AFRICA", b"AMERICA", b"ASIA", b"EUROPE",
+                     b"MIDDLE EAST"]
+    assert pages >= 3
+
+
+def test_start_on_a_held_port_raises_and_never_serves(spark):
+    """A port a live listener holds is refused with OSError: the front
+    neither binds behind the listener nor reports a port, and a client
+    connecting there still reaches the original listener."""
+    held = socket.socket()
+    held.bind(("127.0.0.1", 0))
+    held.listen(1)
+    port = held.getsockname()[1]
+    front = TCLIFront(spark, port=port)
+    try:
+        with pytest.raises(OSError):
+            front.start()
+        assert front.port is None and front._server is None
+        probe = socket.create_connection(("127.0.0.1", port), 5)
+        held.settimeout(5)
+        conn, _ = held.accept()  # the original listener got it
+        conn.close()
+        probe.close()
+    finally:
+        front.stop()
+        held.close()
+
+
 def test_statement_error_surfaces(spark, front):
     c = _Client(front.port)
     try:
@@ -237,6 +293,13 @@ def test_statement_error_surfaces(spark, front):
         resp = c.execute(sess, "SELECT * FROM definitely_not_a_table_xyz")
         assert resp[1][1] == 3
         assert b"definitely_not_a_table_xyz" in resp[1][5]
+        # the error is in band: the session serves the next statement
+        resp = c.execute(sess, "SELECT 41 + 1 AS answer")
+        assert resp[1][1] == 0
+        fr = c.call("FetchResults", [
+            (1, T_STRUCT, _op_fields(resp[2])), (2, T_I32, 0), (3, T_I64, 10),
+        ])
+        assert fr[3][3][0][4][1] == [42]
     finally:
         c.close()
 
@@ -256,12 +319,45 @@ def test_unsupported_rpc_is_graceful(spark, front):
 #    python front — genuine TCLIService wire traffic. Each beeline
 #    invocation costs a JVM start (~15s), so the three scenarios that
 #    matter are packed tightly: plain SQL, the Engine dialect
-#    (macro + MOR UPDATE, statements the JVM Thrift server cannot
-#    run), and enforcement (denial then grant). ------------------------
+#    (macro + MOR UPDATE), and enforcement (denial then grant). --------
+
+
+def beeline_path() -> str:
+    """Path of the beeline launcher bundled with this PySpark."""
+    import os
+
+    import pyspark
+
+    return os.path.join(os.path.dirname(pyspark.__file__), "bin", "beeline")
+
+
+def run_beeline(port: int, sql: "str | list[str]", timeout: float = 180.0,
+                url_suffix: str = "", user: "str | None" = None):
+    """One-shot beeline execution against the running front — the
+    reference's own client binary over real Thrift wire traffic.
+    ``sql`` may be a list (one -e per statement, one connection).
+    ``url_suffix`` appends to the JDBC URL (e.g. ``/;auth=noSasl``);
+    ``user`` sets -n, the client-asserted principal the front maps to
+    ``user.name``. Returns (returncode, stdout, stderr)."""
+    import os
+    import subprocess
+
+    import pyspark
+
+    env = dict(os.environ, SPARK_HOME=os.path.dirname(pyspark.__file__))
+    cmd = [beeline_path(), "-u",
+           f"jdbc:hive2://localhost:{port}{url_suffix}", "--silent=false"]
+    if user:
+        cmd += ["-n", user]
+    for stmt in ([sql] if isinstance(sql, str) else sql):
+        cmd += ["-e", stmt]
+    p = subprocess.run(
+        cmd, capture_output=True, text=True, timeout=timeout, env=env,
+    )
+    return p.returncode, p.stdout, p.stderr
 
 
 def test_beeline_select_roundtrip(spark, front):
-    from amplab_hive_spark.thrift import run_beeline
 
     rc, out, err = run_beeline(
         front.port, "SELECT 1 AS one, 'hi' AS greeting",
@@ -275,7 +371,6 @@ def test_beeline_engine_dialect_mor_update_and_macro(spark, front, tmp_path):
     """VERDICT r11 task 2's 'Done' bar: beeline UPDATE-on-MOR green
     through an Engine-routed front."""
     from amplab_hive_spark import acid
-    from amplab_hive_spark.thrift import run_beeline
 
     name = "tcli_bee_mor"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -312,7 +407,6 @@ def test_beeline_enforcement_denial_then_grant(spark, front):
 
     from amplab_hive_spark import authorization as az
     from amplab_hive_spark.engine import Engine
-    from amplab_hive_spark.thrift import run_beeline
 
     spark.sql("DROP TABLE IF EXISTS tcli_bee_guarded")
     spark.range(4).write.saveAsTable("tcli_bee_guarded")
@@ -481,7 +575,6 @@ def test_beeline_metadata_commands(spark, front):
     """beeline !tables / !columns drive HiveDatabaseMetaData.getTables
     / getColumns — the genuine JDBC metadata round-trip against the
     python front."""
-    from amplab_hive_spark.thrift import run_beeline
 
     spark.sql("DROP TABLE IF EXISTS bee_meta_tbl")
     spark.createDataFrame([(1, "x")], "id bigint, label string") \
@@ -603,7 +696,6 @@ def test_sasl_plain_negotiation_and_identity(spark, front):
 def test_beeline_default_url_sasl(spark, front):
     """Stock beeline with the DEFAULT JDBC URL (no ;auth=noSasl) —
     SASL PLAIN over genuine wire traffic."""
-    from amplab_hive_spark.thrift import run_beeline
 
     rc, out, err = run_beeline(front.port, "SELECT 41+1 AS answer")
     assert rc == 0, err
@@ -1024,7 +1116,6 @@ def test_beeline_drives_the_async_lifecycle(spark, front):
     born RUNNING, beeline's waitForOperationToComplete poll loop, then
     the fetch. Pinned via the front's async counter so a future change
     that silently downgrades beeline to the sync path is caught."""
-    from amplab_hive_spark.thrift import run_beeline
 
     before = front.async_statements
     rc, out, err = run_beeline(
