@@ -11,10 +11,13 @@ Unity / Glue) — nothing else in the engine changes.
 from __future__ import annotations
 
 import os
+import stat
 import weakref
 from types import SimpleNamespace
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -94,10 +97,13 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 
 # Per-session registration cache: session → {sf_dir → DataFrames}.
-# Re-reading 10 parquet footers per query call costs ~5s locally and
-# a metastore round-trip per table on a cluster; registration is
-# idempotent so caching is safe. WeakKeyDictionary, not a plain dict
-# keyed on id(spark): a plain dict (a) pins every session ever passed
+# A hit keeps every registry query's ``tables()`` call a dict lookup;
+# re-reading the ten files per call, even with their schemas known
+# from ``_SCHEMAS``, costs ~0.5 CPU-s of driver-side file listing and
+# relation building (4-core host, sf0.01) and a metastore round-trip
+# per table on a cluster; registration is idempotent so caching is
+# safe. WeakKeyDictionary, not a plain dict keyed on id(spark): a
+# plain dict (a) pins every session ever passed
 # in — the cached DataFrames reference their session, so stopped
 # sessions and their JVM objects can never be collected in a
 # long-lived process — and (b) id() values of dead sessions get
@@ -118,6 +124,63 @@ _VIEW_OWNER: "weakref.WeakKeyDictionary[SparkSession, str]" = (
 )
 
 
+# Process-wide schema registry, the analogue of the reference's one
+# shared metastore (HiveMetaStore.java:232): every session resolves a
+# testdata file against it instead of re-inferring the file's schema,
+# which is one Spark job per table. Keyed on the absolute path and the
+# session's values of the confs that change how Spark maps Parquet
+# types (``_SCHEMA_CONFS``); the value is the file's stamp (size and
+# mtime, per file for a directory) and the schema as read, before the
+# events ``ts`` conversion, so that conversion still dispatches on the
+# type read. A stamp mismatch is a miss: a rewritten file is inferred
+# again and never served a stale schema. Two sessions missing at once
+# both infer and store equal values, so no lock is needed.
+_SCHEMAS: "dict[tuple[str, tuple], tuple[tuple, StructType]]" = {}
+
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _stamp(path: str) -> Optional[tuple]:
+    """Size and mtime of the file at ``path``, or of every file under
+    it; None when this process cannot stat it (a remote URI), so the
+    path is always inferred."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        out = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                fst = os.stat(os.path.join(root, f))
+                out.append((os.path.relpath(os.path.join(root, f), path),
+                            fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str, confs: tuple) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    registry has none for the file as it is now."""
+    key = (os.path.abspath(path), confs)
+    # stamped before the read: a file rewritten during inference is
+    # stored under the older stamp, so the next read misses
+    stamp = _stamp(path)
+    known = _SCHEMAS.get(key)
+    if stamp is not None and known is not None and known[0] == stamp:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 class _Tables(SimpleNamespace):
     """Namespace that defers a per-table load error to first access,
     so one unreadable file cannot fail queries on unrelated tables."""
@@ -136,8 +199,10 @@ class _Tables(SimpleNamespace):
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every testdata table as a temp view; return the DataFrames.
 
-    Reads are lazy — registering all ten views costs only file-footer
-    reads. Filter/column pushdown happens per-query via Catalyst.
+    Reads are lazy. The first read of a file in this process infers its
+    schema (one Spark job per table); every later session reads it with
+    that schema from ``_SCHEMAS`` and runs no job while the file is
+    unchanged. Filter/column pushdown happens per-query via Catalyst.
     A table that fails to load is skipped (its error re-raised only if
     a query actually touches it) rather than failing the whole catalog.
     Failed tables are retried on the next load_tables call, so a
@@ -168,10 +233,11 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         todo = list(TABLES)
     out: dict[str, DataFrame] = dict(cached or {})
     errors: dict[str, Exception] = {}
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
     for name in todo:
         path = os.path.join(sf_dir, f"{name}.parquet")
         try:
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path, confs)
             if name == "events":
                 # The events table's `ts` has shipped as BOTH
                 # TIMESTAMP(NANOS) (readable only as a raw nanos long

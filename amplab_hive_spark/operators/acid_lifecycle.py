@@ -36,6 +36,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.catalog import tables
 from amplab_hive_spark.registry import register
 from amplab_hive_spark.session import local_rows
 
@@ -101,7 +102,7 @@ def acid_mor_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         src = f"mor_lifecycle_src_{uuid.uuid4().hex[:10]}"
         (
-            spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+            tables(spark, sf_dir).lineitem
             .filter("l_orderkey <= 100")
             .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
             .createOrReplaceTempView(src)

@@ -67,7 +67,8 @@ def open_session(spark, sf_dir: Optional[str] = None,
     if database and database != "default":
         sub.catalog.setCurrentDatabase(database)
     # temp views are session-scoped: Engine attaches the testdata
-    # catalog to this session (lazy, footer reads only)
+    # catalog to this session, with no Spark job once any session in
+    # this process has read the files (catalog._SCHEMAS)
     return Engine(sub, sf_dir=sf_dir)
 
 

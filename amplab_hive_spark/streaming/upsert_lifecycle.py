@@ -40,6 +40,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from amplab_hive_spark.catalog import tables
 from amplab_hive_spark.registry import register
 from amplab_hive_spark.session import local_rows
 
@@ -109,7 +110,7 @@ def streaming_upsert_cdc_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
     name = f"upsert_cdc_lifecycle_{uuid.uuid4().hex[:10]}"
     loc = tempfile.mkdtemp(prefix="amplab_upsert_cdc_")
     engine = Engine(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = tables(spark, sf_dir).orders
     try:
         spark.sql(
             f"CREATE TABLE {name} ("

@@ -35,6 +35,7 @@ _FAST_MODULES = {
     "test_statement.py",       # server-front session/cancel/cursor + MOR UPDATE type
     "test_sqltext.py",         # the one SQL lexer the pre-parse shims share
     "test_local_results.py",   # job-free shim answers + MOR/MERGE smoke
+    "test_catalog.py",         # schema registry: no stale schema served
 }
 
 

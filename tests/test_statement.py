@@ -2,10 +2,11 @@
 per-connection session, one job group per execution, one result
 cursor. The session and cancel cases run on the JSON service
 (service.py) and the TCLIService front (tcli.py) alike, so a rule
-that holds on one front and not the other fails here. The rowset
-tests pin the TCLI front's result-page bytes. The last test pins the
-UPDATE projection both write paths share: the assigned value keeps its
-column's type.
+that holds on one front and not the other fails here. A connection's
+testdata attach runs no Spark job once the root has attached the same
+files. The rowset tests pin the TCLI front's result-page bytes. The
+last test pins the UPDATE projection both write paths share: the
+assigned value keeps its column's type.
 
 The cancel tests use a wide result whose partitions are slow to
 compute: one row per partition, each row sleeping in the JVM
@@ -17,9 +18,10 @@ import os
 import socket
 import threading
 import time
+import uuid
 from decimal import Decimal
 
-from pyspark.sql.types import IntegerType
+from pyspark.sql.types import IntegerType, TimestampNTZType, TimestampType
 
 from amplab_hive_spark.service import SqlClient, SqlService
 from amplab_hive_spark.tcli import (
@@ -77,6 +79,33 @@ def test_json_service_enforces_like_tcli(spark):
         p = az._store_path(spark)
         if os.path.exists(p):
             os.remove(p)
+
+
+def test_connection_attach_runs_no_job(spark, sf_dir):
+    """Once the root session has attached ``sf_dir``, a connection's
+    ``open_session`` attaches it with zero Spark jobs: every file's
+    schema comes from the catalog's schema registry instead of one
+    inference job per table. Each view has the root's schema (events.ts
+    still a timestamp, not the raw long) and row count."""
+    from amplab_hive_spark.catalog import TABLES, load_tables
+    from amplab_hive_spark.statement import open_session
+
+    root = load_tables(spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"stmt-attach-{uuid.uuid4().hex[:8]}"
+    sc._jsc.setJobGroup(group, "connection attach", False)
+    try:
+        eng = open_session(spark, sf_dir=sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert eng.spark is not spark
+    assert eng.spark.table("events").schema["ts"].dataType in (
+        TimestampType(), TimestampNTZType())
+    for name in TABLES:
+        assert eng.spark.table(name).schema == root[name].schema, name
+        count = eng.sql(f"SELECT count(*) FROM {name}").first()[0]
+        assert count == root[name].count(), name
 
 
 def _job_statuses(spark, group):
