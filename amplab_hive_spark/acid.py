@@ -493,10 +493,13 @@ def delete_keys_mor(
         raise ValueError(f"key columns not in tombstone frame: {missing}")
     current = read_mor(spark, name)
     # only keys that currently mask something: keeps the no-op
-    # re-delivery path delta-free and the count honest
+    # re-delivery path delta-free and the count honest. The table side
+    # gets no distinct: a semi join emits each probe row at most once
+    # whatever its build side repeats, and Spark would keep the
+    # Aggregate, grouping every key of the table per tombstone batch.
     hit_keys = (
         keys_df.select(*key_cols).distinct()
-        .join(current.select(*key_cols).distinct(), list(key_cols), "left_semi")
+        .join(current.select(*key_cols), list(key_cols), "left_semi")
         .localCheckpoint(eager=True)
     )
     return _commit_key_deletes(

@@ -130,6 +130,16 @@ def get_spark(
         #    supplier are KB-to-MB at any SF; reference does this via
         #    CommonJoinResolver auto map-join conversion).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # -- generated-class cache: the reference ships its vectorized
+        #    expression classes precompiled (SURVEY.md §4.3); Catalyst
+        #    compiles them with Janino into a JVM-wide cache of 100
+        #    classes by default. The 11 headline queries generate ~220
+        #    classes and a merge-on-read service cycle repeats ~75, so
+        #    at 100 a repeated plan recompiled (~190-220 compiles per
+        #    headline pass); at 1000 a warm repeat compiles none
+        #    (PERF.md, "Generated-class cache"). A static conf, read
+        #    when the JVM starts: every session shares it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # -- deterministic timestamp semantics for oracle comparison.
         .config("spark.sql.session.timeZone", "UTC")
         # -- Arrow for the few pandas-UDF paths (LLM ops).

@@ -36,6 +36,7 @@ _FAST_MODULES = {
     "test_sqltext.py",         # the one SQL lexer the pre-parse shims share
     "test_local_results.py",   # job-free shim answers + MOR/MERGE smoke
     "test_catalog.py",         # schema registry: no stale schema served
+    "test_codegen_reuse.py",   # a warm repeat pass compiles no class
 }
 
 

@@ -7,8 +7,9 @@ a ``LocalTableScan``, and taking it runs no Spark job.
 
 The module also carries the default-tier merge-on-read smoke through
 ``Engine.sql`` (UPDATE, DELETE, COMPACT 'minor', COMPACT 'major', each
-read back) and a MERGE on a copy-on-write table, including a widening
-assignment that must keep its column's type."""
+read back), the key-frame DELETE of the CDC tombstone path
+(``acid.delete_keys_mor``) and a MERGE on a copy-on-write table,
+including a widening assignment that must keep its column's type."""
 
 import datetime
 import os
@@ -19,6 +20,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql.types import StructField, StructType, StringType
 
+from amplab_hive_spark import acid
 from amplab_hive_spark import authorization as az
 from amplab_hive_spark.engine import Engine
 from amplab_hive_spark.operators import acid_lifecycle
@@ -227,6 +229,35 @@ def test_mor_lifecycle_smoke(spark, eng):
     _assert_local(spark, engine.sql("ALTER TABLE lr_mor COMPACT 'major'"),
                   count.format("compacted_deltas"))
     assert _read(engine, "lr_mor") == after_dml
+
+
+def test_delete_keys_mor_masks_once(spark, eng):
+    """The CDC tombstone path: a key frame masks whole key groups, and
+    re-delivering the same keys masks nothing and writes no delta."""
+    engine, loc = eng
+    spark.sql("DROP TABLE IF EXISTS lr_mor_keys")
+    spark.sql(
+        f"CREATE TABLE lr_mor_keys (k INT, c STRING) USING parquet "
+        f"LOCATION '{loc}/lr_mor_keys' "
+        f"TBLPROPERTIES ('transactional'='true', 'merge_keys'='k')"
+    )
+    try:
+        spark.sql("INSERT INTO lr_mor_keys VALUES (1,'a'), (2,'b'), (2,'bb'), (3,'c')")
+        keys = spark.createDataFrame([(2,), (3,), (3,), (9,)], "k int")
+        delta_dir = acid._delta_path(spark, "lr_mor_keys")
+
+        def deltas():
+            return sorted(os.listdir(delta_dir)) if os.path.isdir(delta_dir) else []
+
+        assert acid.delete_keys_mor(spark, "lr_mor_keys", keys, ["k"]) == 3
+        written = deltas()
+        assert written
+        assert _read(engine, "lr_mor_keys") == [(1, "a")]
+        assert acid.delete_keys_mor(spark, "lr_mor_keys", keys, ["k"]) == 0
+        assert deltas() == written
+        assert _read(engine, "lr_mor_keys") == [(1, "a")]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS lr_mor_keys")
 
 
 _COW_MERGES = [
